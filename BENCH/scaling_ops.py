@@ -265,6 +265,30 @@ def _eff(a: dict, b: dict) -> float:
     return b["throughput_rows_per_sec"] / (ratio * a["throughput_rows_per_sec"])
 
 
+# one state row per measured configuration: slots-only and cgroup-capped
+# runs (``pinned``), other corpora, volumes or partition counts measure
+# different things (see module docstring) and never share a minimum
+STATE_KEY = ("job", "cpus", "sf_dir", "rep", "partitions", "pinned")
+
+
+def _state_key(r: dict) -> tuple:
+    return tuple(bool(r.get(f)) if f == "pinned" else r.get(f) for f in STATE_KEY)
+
+
+def merge_state(state: list[dict], fresh: list[dict]) -> list[dict]:
+    """Per-configuration minima over the saved ``state`` rows and this
+    invocation's ``fresh`` rows. Host noise only ever slows a run down, so
+    per-configuration minima converge on true capability; rows of every
+    configuration not run now are carried through unchanged, so one
+    unpinned or single-job rerun never drops other evidence."""
+    best: dict[tuple, dict] = {}
+    for r in [*state, *fresh]:
+        k = _state_key(r)
+        if k not in best or r["seconds"] < best[k]["seconds"]:
+            best[k] = r
+    return list(best.values())
+
+
 def parent(jobs: list[str]) -> None:
     state_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "scaling_ops_state.json"
@@ -274,7 +298,7 @@ def parent(jobs: list[str]) -> None:
         with open(state_path) as f:
             state = json.load(f)
 
-    best: dict[tuple[str, int], dict] = {}
+    fresh: list[dict] = []
     for _ in range(ROUNDS):
         for job in jobs:
             for cpus in LEVELS:
@@ -283,36 +307,18 @@ def parent(jobs: list[str]) -> None:
                      os.path.abspath(__file__), "--child", job, str(cpus)],
                     capture_output=True, text=True, cwd=REPO_ROOT, check=True,
                 )
-                r = json.loads(out.stdout.strip().splitlines()[-1])
-                k = (job, cpus)
-                if k not in best or r["seconds"] < best[k]["seconds"]:
-                    best[k] = r
+                fresh.append(json.loads(out.stdout.strip().splitlines()[-1]))
 
-    # merge best-known minima for the identical workload (host noise only
-    # ever slows runs down — per-level minima converge on true capability);
-    # rows for jobs/configs NOT exercised this invocation are kept as-is so
-    # a single-job rerun never drops the other family's evidence
-    for r in state:
-        k = (r["job"], r["cpus"])
-        rep = REP_DOCS if r["job"] == "minhash" else REP_PTS
-        if k not in best:
-            best[k] = r
-            continue
-        same = (
-            r.get("sf_dir") == SF_DIR
-            and r.get("rep") == rep
-            and r.get("partitions") == PARTITIONS
-            # slots-only and cgroup-capped runs measure different things
-            # (see module docstring) — never cross-merge their minima
-            and bool(r.get("pinned")) == bool(best[k].get("pinned"))
-        )
-        if same and r["seconds"] < best[k]["seconds"]:
-            best[k] = r
+    merged = merge_state(state, fresh)
     with open(state_path, "w") as f:
-        json.dump(list(best.values()), f)
+        json.dump(merged, f)
 
+    # report each level under the configuration it just ran in
+    by_key = {_state_key(r): r for r in merged}
     for job in jobs:
-        by_cpus = {c: best[(job, c)] for c in LEVELS if (job, c) in best}
+        by_cpus = {
+            r["cpus"]: by_key[_state_key(r)] for r in fresh if r["job"] == job
+        }
         effs = {
             f"{a}->{b}": round(_eff(by_cpus[a], by_cpus[b]), 3)
             for a in by_cpus

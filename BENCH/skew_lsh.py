@@ -5,21 +5,26 @@ dumps): every member of a cluster shares every LSH band bucket, so the
 candidate self-join concentrates that cluster's f² pair expansion on one
 (band, bucket) reducer key. This bench builds a synthetic band table with
 exactly that shape — N mostly-unique docs plus one clone cluster — and
-times the candidate join under:
+times the candidate join (operators/banded.py, via
+text.dedup.lsh_candidate_pairs) under:
 
   plain    shuffle self-join, AQE skewJoin OFF
   aqe      AQE skew-join splitting ON
-  salted   block-salted self-join (text.dedup.lsh_candidate_pairs_salted)
 
-All strategies must agree on the output pair count (asserted).
+Both strategies must agree on the output pair count (asserted).
 
-MEASURED FINDING (best-of-3, see BASELINE_extra.md): AQE wins here — the
-sort-merge skew split chunks the hot key's stream side and replays the
-build side per chunk, so the single hot bucket parallelizes with no plan
-change, while explicit salting pays replication for nothing. The opposite
-of the hot-cell broadcast-regime result in BENCH/skew.py — which is why
-the engine keeps AQE on everywhere and reserves explicit salting for the
-pip cell join. Run:
+MEASURED FINDING (best-of-3, 2M docs, one 4000-doc clone cluster, see
+BASELINE_extra.md): AQE wins here — plain 21.7 s, AQE 11.6 s, and a third
+arm, hot-only block salting (n_salt=8: a bucket-size count job found the
+hot keys, whose rows then took a block-salted self-join), 35.1 s;
+whole-table salting measured 2.6x worse than plain. The sort-merge skew
+split chunks the hot key's stream side and replays the build side per
+chunk, so the single hot bucket parallelizes with no plan change, while
+explicit salting pays replication for nothing. That arm was removed with
+the salted operator once this result made AQE the only policy. The
+opposite of the hot-cell broadcast-regime result in BENCH/skew.py — which
+is why the engine keeps AQE on everywhere and reserves explicit salting
+for the pip cell join. Run:
   python BENCH/skew_lsh.py        # one JSON line + appends BASELINE_extra.md
 """
 
@@ -37,7 +42,6 @@ if REPO_ROOT not in sys.path:
 N_DOCS = int(os.environ.get("SPARK_GRAFT_LSH_N", "2000000"))
 HOT_EVERY = 500         # 1/500 of docs form one clone cluster (~4000 docs)
 N_BANDS = 8
-N_SALT = 8
 
 
 def build_bands(spark):
@@ -60,10 +64,7 @@ def run_strategy(name: str) -> dict:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     from housenumbercore_spark.session import get_spark
-    from housenumbercore_spark.text.dedup import (
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_salted,
-    )
+    from housenumbercore_spark.text.dedup import lsh_candidate_pairs
 
     conf = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -75,11 +76,7 @@ def run_strategy(name: str) -> dict:
     spark = get_spark(app_name=f"skew-lsh-{name}", extra_conf=conf)
     for k, v in conf.items():
         spark.conf.set(k, v)
-    bands = build_bands(spark)
-    if name == "salted":
-        pairs = lsh_candidate_pairs_salted(bands, n_salt=N_SALT)
-    else:
-        pairs = lsh_candidate_pairs(bands)
+    pairs = lsh_candidate_pairs(build_bands(spark))
     pairs.count()  # warm-up (codegen, shuffle files)
     # best-of-3: host noisy neighbors stall identical runs; contention only
     # ever slows a run down (same methodology as BENCH/scaling.py)
@@ -96,7 +93,7 @@ def main() -> None:
     import subprocess
 
     results = []
-    for name in ("plain", "aqe", "salted"):
+    for name in ("plain", "aqe"):
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--one", name],
             capture_output=True, text=True, cwd=REPO_ROOT, check=True,
@@ -109,7 +106,6 @@ def main() -> None:
         "n_docs": N_DOCS,
         "clone_cluster": N_DOCS // HOT_EVERY,
         "pairs": results[0]["rows"],
-        "n_salt": N_SALT,
         "seconds": {r["strategy"]: r["seconds"] for r in results},
     }
     print(json.dumps(summary))
@@ -127,7 +123,6 @@ def main() -> None:
         label = {
             "plain": "plain shuffle self-join (skewJoin off)",
             "aqe": "AQE skew-join splitting",
-            "salted": f"hot-only block salting (n_salt={N_SALT})",
         }[r["strategy"]]
         md += f"| {label} | {r['seconds']} |\n"
     extra = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -18,8 +18,9 @@ operators, mirroring the text-side shapes in text/dedup.py:
   shuffle on the normalized string only.
 - :func:`phash_neardup_pairs` — perceptual near-duplicates via banded LSH
   over the stored 64-bit DCT phash (codec.phash64): 4 bands x 16 bits
-  generate candidates through a hash equi-join (same candidate shape as
-  text/dedup.simhash_pairs), then an exact ``bit_count(a ^ b)`` refine.
+  generate candidates through the banded-pair join of operators/banded.py
+  (the one every text and embedding LSH family uses), then an exact
+  ``bit_count(a ^ b)`` refine.
   Recall is the standard LSH guarantee: a pair at Hamming distance d < 16
   always shares at least one band when its differing bits hit <= 3 bands;
   wider misses are the documented LSH trade (the oracle reproduces the
@@ -35,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.banded import banded_pairs, bit_bands, explode_bands
 from ..pinning import pin
 
 PHASH_BITS = 64
@@ -183,43 +185,22 @@ def phash_neardup_pairs(
 ) -> DataFrame:
     """Perceptual near-duplicate pairs → (img_a, img_b, hamming).
 
-    Banded LSH on the stored 64-bit phash: posexplode the 4 x 16-bit bands,
-    self-equi-join on (band, bucket), dedup candidate pairs, refine with
-    exact ``bit_count(xor)``. Identical scale shape to simhash_pairs
-    (text/dedup.py:254): the join key is (int, int), payloads are two
-    int64s, and AQE handles hot buckets (flat-image phashes are the
-    image-world stop words). ``(phash >> s) & 0xFFFF`` is shift-direction
-    safe: the mask keeps only the low 16 bits, which arithmetic and logical
-    shifts agree on.
+    Banded LSH on the stored 64-bit phash: 4 x 16-bit bands generate
+    candidates and the exact ``bit_count(xor)`` Hamming bound is the keep
+    refine of operators/banded.py. The join key is (int, int), payloads
+    are two int64s, and AQE handles hot buckets (flat-image phashes are
+    the image-world stop words).
     """
-    bb = PHASH_BAND_BITS
-    mask = (1 << bb) - 1
-    bands = df.select(
-        F.col(id_col).alias("img"),
-        F.col(phash_col).alias("ph"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"({phash_col} >> {j * bb}) & {mask}")
-                    for j in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
+    bands = explode_bands(
+        df,
+        [F.col(id_col).alias("img"), F.col(phash_col).alias("ph")],
+        bit_bands(phash_col, PHASH_BANDS, PHASH_BAND_BITS),
     )
-    left = bands.select(
-        F.col("img").alias("img_a"), F.col("ph").alias("ha"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("img").alias("img_b"), F.col("ph").alias("hb"), "band", "bucket"
-    )
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("img_a") < F.col("img_b"))
-        .select("img_a", "img_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
-        # refine BEFORE dedup: the Hamming filter is a map-side expression,
-        # so the dropDuplicates shuffle carries only the near pairs (~1e4)
-        # instead of the full candidate fan-out (~1e7 at 1M rows) — measured
-        # 6.5x end-to-end in BENCH/phash_scale.py (73.3 s -> 11.3 s)
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["img_a", "img_b"])
+    return banded_pairs(
+        bands.withColumnsRenamed({"img": "img_a", "ph": "ha"}),
+        bands.withColumnsRenamed({"img": "img_b", "ph": "hb"}),
+        "img_a",
+        "img_b",
+        score=F.expr("bit_count(ha ^ hb)").alias("hamming"),
+        keep=F.col("hamming") <= max_hamming,
     )

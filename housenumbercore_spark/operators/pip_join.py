@@ -17,10 +17,13 @@ set-based plan over all areas at once:
    64 MB broadcast threshold), so the 10¹²-row fact side is *never
    shuffled*. For dims too large to broadcast, :func:`salted_cell_join`
    provides a shuffle join with hot-cell salting.
-4. **Refine** candidates with the exact vectorized predicate
-   (covers/contains, geo.geometry) inside an Arrow-batched ``mapInPandas``;
-   polygons reach executors once via an explicit SparkContext broadcast,
-   not per-row payload duplication.
+4. **Refine** candidates with the exact predicate as one whole-stage
+   codegen expression (:func:`jvm_refine_expr`): each cover row carries
+   the ring edges overlapping its cell, an off-boundary reference point
+   and that point's membership, so parity transport along ref→point
+   decides covers/contains. Full (interior) cells carry no edges and are
+   sure hits. No Python runs on the fact path; the numpy kernels of
+   geo.geometry are the test-side oracle for this expression.
 
 Scale notes (100 TB / 1000 executors): the only wide operation in the whole
 plan is whatever aggregation the caller adds afterwards; candidates stream
@@ -376,48 +379,6 @@ def seg_cover_cells_cols(
     return d.withColumn(out, cell).drop("__gx", "__gy")
 
 
-def refine_covers(
-    cand: DataFrame,
-    id_col: str = "area_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    predicate: str = "covers",
-    wkb_col: str = "__wkb",
-) -> DataFrame:
-    """Exact point-in-polygon filter on cell-join candidates.
-
-    The polygon WKB rides on each candidate row (``wkb_col`` — attached by
-    a broadcast join against the area dim, so bytes move executor-to-
-    executor once per build, never through a driver collect); parsed
-    geometries are cached per Python worker keyed by area id."""
-    if predicate not in ("covers", "contains"):
-        # same failure shape as jvm_refine_expr for the same user error
-        raise ValueError(f"unknown predicate {predicate!r}")
-    pred_fn = {"covers": G.covers, "contains": G.contains_point}[predicate]
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name != wkb_col]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def gen(batches):
-        parsed: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon].to_numpy(dtype=np.float64)
-            py = pdf[lat].to_numpy(dtype=np.float64)
-            wkbs = pdf[wkb_col].values
-            for aid, idx in pdf.groupby(id_col, sort=False).indices.items():
-                poly = parsed.get(aid)
-                if poly is None:
-                    poly = parsed[aid] = G.parse_wkb(bytes(wkbs[idx[0]]))
-                keep[idx] = pred_fn(poly, px[idx], py[idx])
-            yield pdf.loc[keep, out_cols]
-
-    return cand.mapInPandas(gen, out_schema)
-
-
 def assign_points_to_areas(
     spark,
     points: DataFrame,
@@ -429,20 +390,18 @@ def assign_points_to_areas(
     res: int | None = None,
     predicate: str = "covers",
     exact: bool = True,
-    refine: str = "jvm",
 ) -> DataFrame:
     """points × areas spatial join: one output row per (point, covering area).
 
     Overlapping admin levels produce multiple rows per point by design
     (reference evaluates each area independently; SURVEY.md §7.3).
 
-    ``refine="jvm"`` (default) keeps the exact test inside whole-stage
-    codegen — zero Python on the fact path (measured: the Arrow/IPC hop
-    caps at a few M rows/s per node regardless of cores, so this is the
-    difference between a scaling and a non-scaling plan).
-    ``refine="python"`` routes boundary-cell candidates through the
-    vectorized kernel instead (boundary-inclusive ``covers`` / strict
-    ``contains`` semantics for points exactly ON a polygon boundary).
+    The exact test stays inside whole-stage codegen — zero Python on the
+    fact path (measured: the Arrow/IPC hop caps at a few M rows/s per
+    node regardless of cores, so this is the difference between a
+    scaling and a non-scaling plan). ``predicate`` is boundary-inclusive
+    ``covers`` or strict ``contains`` for points exactly ON a polygon
+    boundary.
 
     ``spark`` is unused (the plan derives everything from the input
     frames); the parameter stays for signature uniformity with the
@@ -461,24 +420,12 @@ def assign_points_to_areas(
     ).drop("__dim_cell", "__cell")
     if not exact:
         return cand.drop(*refine_cols)
-    if refine == "jvm":
-        # predicate reaches the codegen refine too (a silently-ignored
-        # 'contains' here would return boundary points for BOTH areas
-        # sharing an edge while the caller asked for strict containment)
-        return cand.filter(
-            jvm_refine_expr(lon, lat, predicate=predicate)
-        ).drop(*refine_cols)
-    # python path: interior cells accepted by construction, boundary cells
-    # through the vectorized exact kernel; the polygon WKB reaches the
-    # refine via a broadcast dim join (no driver-side collect)
-    interior = cand.filter(F.col("__pj_full")).drop(*refine_cols)
-    boundary = cand.filter(~F.col("__pj_full")).drop(*refine_cols)
-    wkb_dim = areas.select(id_col, F.col(wkb_col).alias("__wkb"))
-    refined = refine_covers(
-        boundary.join(F.broadcast(wkb_dim), id_col),
-        id_col=id_col, lon=lon, lat=lat, predicate=predicate,
-    )
-    return interior.unionByName(refined)
+    # predicate reaches the codegen refine too (a silently-ignored
+    # 'contains' here would return boundary points for BOTH areas
+    # sharing an edge while the caller asked for strict containment)
+    return cand.filter(
+        jvm_refine_expr(lon, lat, predicate=predicate)
+    ).drop(*refine_cols)
 
 
 def salted_cell_join(

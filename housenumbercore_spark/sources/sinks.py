@@ -21,6 +21,7 @@ DataFrame (`repartition(partition_cols)` avoids tiny-file explosions).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def write_partitioned(
@@ -146,6 +147,24 @@ def _fs_find_partition_dir(fs, base, values: tuple) -> list[str] | None:
     return rel
 
 
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested array element, map value and struct field
+    nullable — the form Spark reads back from a file footer, whatever the
+    nullability of the frame that wrote it."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    return dt
+
+
 def _fs_rename(fs, src, dst) -> None:
     if not fs.rename(src, dst):
         raise IOError(f"rename failed: {src} -> {dst}")
@@ -265,12 +284,15 @@ def merge_upsert_partitioned(
     if fs0.exists(root0):
         probe = _fs_first_data_file(fs0, root0)
         if probe is not None:
+            # types compare with nullability ignored: the footer reads
+            # back nullable all the way down, so a non-nullable array
+            # element or struct field in ``updates`` is not drift
             on_disk = {
-                f.name: f.dataType
+                f.name: _nullable(f.dataType)
                 for f in spark.read.parquet(probe).schema.fields
             }
             expected = {
-                f.name: f.dataType
+                f.name: _nullable(f.dataType)
                 for f in updates.schema.fields
                 if f.name not in partition_cols
             }

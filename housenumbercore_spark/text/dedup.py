@@ -5,10 +5,11 @@ Scale design (100 TB corpus):
   shuffle on the hash key, never on the text payload.
 - MinHash signatures are pure per-row column expressions (no shuffle, no
   Python); only the 32×int64 signature — not the document — enters the LSH
-  band shuffle. Candidate generation is an equi-join on (band, bucket),
-  AQE skew-join handles hot buckets.
-- SimHash is likewise per-row; candidates via 10-bit band equi-join, then a
-  bit_count(xor) refine.
+  band shuffle.
+- SimHash is likewise per-row; its 60 bits split into 6 bands of 10.
+- Both candidate stages are the banded-pair join of operators/banded.py
+  (equi-join on (band, bucket), refine before dedup, AQE for hot buckets);
+  SimHash refines with an exact bit_count(xor) Hamming bound.
 - n-gram Jaccard uses the inverted-index join (explode shingle → equi-join
   on shingle → count per pair), the set-based alternative to all-pairs.
 
@@ -20,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.banded import banded_pairs, bit_bands, explode_bands
 from ..pinning import pin, unpin
 from .analysis import tokens_col
 from .hashing import (
@@ -125,74 +127,18 @@ def minhash_bands(sigs: DataFrame) -> DataFrame:
             for j in range(MINHASH_BANDS)
         ]
     )
-    return sigs.select(
-        "doc_id", F.posexplode(buckets).alias("band", "bucket")
-    )
+    return explode_bands(sigs, ["doc_id"], buckets)
 
 
 def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing any LSH bucket —
-    equi-join on (band, bucket); AQE splits skewed hot buckets."""
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"), "band", "bucket"
+    """Distinct candidate pairs (doc_a < doc_b) sharing any LSH bucket
+    (operators/banded.py)."""
+    return banded_pairs(
+        bands.withColumnRenamed("doc_id", "doc_a"),
+        bands.withColumnRenamed("doc_id", "doc_b"),
+        "doc_a",
+        "doc_b",
     )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"), "band", "bucket"
-    )
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
-def lsh_candidate_pairs_salted(
-    bands: DataFrame, n_salt: int = 8, hot_threshold: int = 256
-) -> DataFrame:
-    """Skew-aware variant of :func:`lsh_candidate_pairs` for corpora with
-    near-dup mega-clusters: one hot (band, bucket) key otherwise lands its
-    whole f² pair expansion on a single reducer.
-
-    Two-phase: a bucket-size aggregate finds keys with more than
-    ``hot_threshold`` members (narrow count, map-side combinable); only
-    THOSE rows take the block-salted self-join — right side keyed by
-    ``block = pmod(hash(doc_id), n_salt)``, left side replicated over
-    blocks, so the hot key's work spreads over ``n_salt`` reducers and each
-    (a, b) pair is still produced exactly once (at b's block). The cold
-    majority takes the plain equi-join untouched.
-
-    MEASURED (BENCH/skew_lsh.py, best-of-3): on the clone-cluster shape AQE
-    skew-join splitting beats this operator (11.6 s vs 35.1 s; whole-table
-    salting 2.6× worse than plain) — sort-merge skew splitting already
-    parallelizes a single hot key by chunking its stream side. Keep AQE on
-    (session.py default) and use this variant only where AQE is unavailable
-    or disabled."""
-    sizes = bands.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-    hot_keys = sizes.filter(F.col("__n") > hot_threshold).select("band", "bucket")
-    hot = bands.join(F.broadcast(hot_keys), ["band", "bucket"], "left_semi")
-    cold = bands.join(F.broadcast(hot_keys), ["band", "bucket"], "left_anti")
-
-    cold_pairs = (
-        cold.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-        .join(cold.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
-              ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    left = (
-        hot.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-        .withColumn("__blk", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-    )
-    right = hot.select(
-        F.col("doc_id").alias("doc_b"), "band", "bucket"
-    ).withColumn("__blk", F.pmod(F.hash("doc_b"), F.lit(n_salt)))
-    hot_pairs = (
-        left.join(right, ["band", "bucket", "__blk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    return cold_pairs.unionByName(hot_pairs).dropDuplicates(["doc_a", "doc_b"])
 
 
 def minhash_dedup_pairs(
@@ -301,8 +247,9 @@ def simhash(docs: DataFrame) -> DataFrame:
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 24) -> DataFrame:
-    """Near-dup pairs by SimHash: 10-bit band equi-join for candidates,
-    then exact Hamming distance via bit_count(xor) refine.
+    """Near-dup pairs by SimHash: 10-bit band candidates, then the exact
+    Hamming distance via bit_count(xor) as the keep refine
+    (operators/banded.py).
 
     The hash frame is pinned (pinning.py, same rationale as
     :func:`minhash_dedup_pairs`) because the band self-join consumes it
@@ -312,37 +259,18 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 24) -> DataFrame:
     sf0.1; at the 10¹²-doc shape the pin is one narrow (doc_id, int64)
     row per doc, negligible next to re-running the corpus scan)."""
     s = pin(simhash(docs))
-    bb = SIMHASH_BAND_BITS
-    bands = s.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"(simhash >> {j * bb}) & {(1 << bb) - 1}")
-                    for j in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
+    bands = explode_bands(
+        s,
+        ["doc_id", "simhash"],
+        bit_bands("simhash", SIMHASH_BANDS, SIMHASH_BAND_BITS),
     )
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"), "band", "bucket"
-    )
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming")
-        )
-        # refine BEFORE dedup: the Hamming filter is a map-side expression,
-        # so the dropDuplicates shuffle carries only near pairs, not the
-        # full band-join fan-out (same fix as images/dedup.py, measured 6.5x
-        # in BENCH/phash_scale.py)
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_a", "doc_b"])
+    return banded_pairs(
+        bands.withColumnsRenamed({"doc_id": "doc_a", "simhash": "ha"}),
+        bands.withColumnsRenamed({"doc_id": "doc_b", "simhash": "hb"}),
+        "doc_a",
+        "doc_b",
+        score=F.expr("bit_count(ha ^ hb)").alias("hamming"),
+        keep=F.col("hamming") <= max_hamming,
     )
 
 

@@ -11,9 +11,10 @@ Scale design:
   the final per-query top-k window on nq partitions.
 - The ANN path hashes every vector into L=4 sign-LSH tables of 8
   hyperplanes (literal integer planes derived from md5 — constant-folded,
-  no per-row hashing). Candidates come from an equi-join on
-  (table, bucket): at 10^12 rows this is the join that replaces the
-  quadratic scan, and bucket skew is handled by AQE skew-join.
+  no per-row hashing). Candidates come from the banded-pair join of
+  operators/banded.py keyed on (table, bucket): at 10^12 rows this is the
+  join that replaces the quadratic scan, and bucket skew is handled by AQE
+  skew-join.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..operators.banded import banded_pairs, explode_bands
 from ..pinning import pin
 from ..text.hashing import _const
 
@@ -32,6 +34,7 @@ TOPK = 5
 
 ANN_TABLES = 4
 ANN_PLANES = 8  # bits per table → 256 buckets/table
+ANN_KEYS = ["tbl", "bucket"]  # band keys of the ann_buckets index
 
 
 def plane(t: int, p: int) -> list[int]:
@@ -108,13 +111,11 @@ def ann_buckets(emb: DataFrame) -> DataFrame:
             for p in range(ANN_PLANES)
         )
         bucket_exprs.append(f"({bits})")
-    return q.select(
-        "vec_id",
-        "qv",
-        "n2",
-        F.posexplode(F.expr(f"array({', '.join(bucket_exprs)})")).alias(
-            "tbl", "bucket"
-        ),
+    return explode_bands(
+        q,
+        ["vec_id", "qv", "n2"],
+        F.expr(f"array({', '.join(bucket_exprs)})"),
+        keys=ANN_KEYS,
     )
 
 
@@ -130,29 +131,16 @@ def ann_candidates(emb: DataFrame, nq: int = NQ) -> DataFrame:
     map-side dot products per pair and shrinks the shuffled row to three
     scalars."""
     b = ann_buckets(emb)
-    queries = b.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("qa"),
-        F.col("n2").alias("na"),
-        "tbl",
-        "bucket",
-    )
-    corpus = b.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("qv").alias("qb"),
-        F.col("n2").alias("nb"),
-        "tbl",
-        "bucket",
-    )
-    return (
-        corpus.join(F.broadcast(queries), ["tbl", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos("qa", "qb", "na", "nb").alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
+    return banded_pairs(
+        b.filter(F.col("vec_id") < nq).withColumnsRenamed(
+            {"vec_id": "query_id", "qv": "qa", "n2": "na"}
+        ),
+        b.withColumnsRenamed({"vec_id": "neighbor_id", "qv": "qb", "n2": "nb"}),
+        "query_id",
+        "neighbor_id",
+        on=ANN_KEYS,
+        probe=True,
+        score=_cos("qa", "qb", "na", "nb").alias("cos_sim"),
     )
 
 
@@ -380,7 +368,8 @@ NEARDUP_COS = 0.25  # driver testdata embeddings are near-random; 0.25 keeps
 
 
 def neardup_pairs(emb: DataFrame, threshold: float = NEARDUP_COS) -> DataFrame:
-    """Embedding-cosine near-dup pairs within shared LSH buckets.
+    """Embedding-cosine near-dup pairs within shared LSH buckets; the
+    cosine threshold is the keep refine of operators/banded.py.
 
     The bucketed frame is pinned (pinning.py, same rationale as
     text/dedup.minhash_dedup_pairs): the self-join consumes it twice
@@ -388,31 +377,12 @@ def neardup_pairs(emb: DataFrame, threshold: float = NEARDUP_COS) -> DataFrame:
     sides, so without the pin the quantize + hyperplane-hash scan runs
     once per side."""
     b = pin(ann_buckets(emb))
-    left = b.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("qv").alias("qa"),
-        F.col("n2").alias("na"),
-        "tbl",
-        "bucket",
-    )
-    right = b.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("qv").alias("qb"),
-        F.col("n2").alias("nb"),
-        "tbl",
-        "bucket",
-    )
-    # threshold BEFORE the pair dedup (refine-before-dedup, the measured
-    # pattern from text/dedup.simhash_pairs): the cosine is deterministic
-    # per pair, so filtering first is result-identical, and the dedup
-    # exchange then carries only above-threshold pairs instead of the
-    # full bucket-join fan-out (dominated by below-threshold pairs)
-    return (
-        left.join(right, ["tbl", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a", "vec_b", _cos("qa", "qb", "na", "nb").alias("cos_sim")
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .dropDuplicates(["vec_a", "vec_b"])
+    return banded_pairs(
+        b.withColumnsRenamed({"vec_id": "vec_a", "qv": "qa", "n2": "na"}),
+        b.withColumnsRenamed({"vec_id": "vec_b", "qv": "qb", "n2": "nb"}),
+        "vec_a",
+        "vec_b",
+        on=ANN_KEYS,
+        score=_cos("qa", "qb", "na", "nb").alias("cos_sim"),
+        keep=F.col("cos_sim") >= threshold,
     )

@@ -158,29 +158,12 @@ def test_jvm_refine_vertex_collinear_degeneracy(spark):
     assert got == want
 
 
-def test_python_refine_matches_jvm_and_is_collect_free(spark, world):
-    """The non-default python refine path must agree with the JVM parity
-    transport and must not collect polygons to the driver (WKB rides the
-    broadcast dim join instead)."""
+def test_assign_points_to_areas_is_collect_free():
+    """Polygons must never be collected to the driver: the refine payload
+    rides the broadcast cover join (the JVM refine itself is checked
+    against the numpy kernels in test_refine_fuzz.py)."""
     import inspect
 
-    pts, areas = world
-    a = (
-        PJ.assign_points_to_areas(spark, pts, areas, refine="jvm")
-        .select("point_id", "area_id")
-        .toPandas()
-        .sort_values(["point_id", "area_id"])
-        .reset_index(drop=True)
-    )
-    b = (
-        PJ.assign_points_to_areas(spark, pts, areas, refine="python")
-        .select("point_id", "area_id")
-        .toPandas()
-        .sort_values(["point_id", "area_id"])
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-    assert ".collect()" not in inspect.getsource(PJ.refine_covers)
     assert ".collect()" not in inspect.getsource(PJ.assign_points_to_areas)
 
 
@@ -277,9 +260,9 @@ def test_cover_cells_bad_geometry_names_area(spark):
         PJ.cover_cells(areas, 4).collect()
 
 
-def test_refine_python_bad_predicate_value_error(spark, world):
+def test_refine_bad_predicate_value_error(spark, world):
     pts, areas = world
     with pytest.raises(ValueError, match="unknown predicate"):
         PJ.assign_points_to_areas(
-            spark, pts, areas, refine="python", predicate="contians"
+            spark, pts, areas, predicate="contians"
         ).collect()

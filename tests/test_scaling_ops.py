@@ -8,6 +8,7 @@ cross-replica candidate pair survives, and (b) the verified near-dup pair
 set is exactly REP linear copies of the base corpus's pair set. If either
 claim drifted (e.g. a tokenizer change making the suffix fold away), the
 scaling efficiency figures would silently measure a different workload.
+The harness's state-file merge is checked here too, without Spark.
 """
 
 from __future__ import annotations
@@ -47,16 +48,15 @@ def test_replicated_corpus_pairs_are_linear_in_rep(spark, sops):
     base_pairs = TD.minhash_dedup_pairs(base).collect()
     rep_pairs = sops._minhash_job(spark).collect()
 
-    # (b) linear in REP within the harness's own tolerance: the word
-    # mapping preserves TRUE Jaccard exactly, but LSH recall on borderline
-    # pairs is stochastic in the hash draw of the renamed strings
-    # (scaling_ops.py docstring: ~5% below REP x base at REP=768), so
-    # exact set equality is NOT a promised property — a drift beyond 10%
-    # is (it would mean the suffix folded away or the workload changed)
+    # (b) linear in REP, exactly: the word mapping preserves true
+    # Jaccard, and (a) below requires every replica to reproduce the base
+    # pair set exactly, so the total is exactly REP copies of it; the
+    # count also catches a pair emitted twice, which (a)'s set compare
+    # cannot. (On larger corpora the renamed strings draw other hashes
+    # and LSH may drop a borderline pair — see the scaling_ops.py
+    # docstring — but on this fixture none drops.)
     assert len(base_pairs) > 0
-    lo = 0.9 * sops.REP_DOCS * len(base_pairs)
-    hi = 1.1 * sops.REP_DOCS * len(base_pairs)
-    assert lo <= len(rep_pairs) <= hi, (
+    assert len(rep_pairs) == sops.REP_DOCS * len(base_pairs), (
         f"{len(rep_pairs)} pairs vs base {len(base_pairs)} x REP "
         f"{sops.REP_DOCS}: replication is no longer workload-linear"
     )
@@ -94,3 +94,26 @@ def test_knn_job_answers_every_replicated_point(spark, sops):
     base_pts = S.points_df(spark, SF_SMALL).count()
     # multires ladder ends in a whole-domain fallback: every point answered
     assert rows == sops.REP_PTS * base_pts
+
+
+def test_state_merge_keeps_each_configs_minimum():
+    """The state file keeps one minimum per (job, cpus, sf_dir, rep,
+    partitions, pinned): a run in one configuration neither replaces nor
+    erases the rows of another, and merging is idempotent."""
+    sops = _load_scaling_ops()
+    cfg = {"job": "minhash", "cpus": 2, "sf_dir": "/sf", "rep": 4, "partitions": 8}
+    pinned = {**cfg, "pinned": True, "seconds": 100.0}
+    unpinned = {**cfg, "pinned": False, "seconds": 50.0}
+    state = [pinned, unpinned]
+
+    # a slower unpinned rerun: both configurations keep their minima
+    once = sops.merge_state(state, [{**unpinned, "seconds": 60.0}])
+    assert once == state
+    # a faster pinned rerun lowers only the pinned minimum
+    faster = {**pinned, "seconds": 90.0}
+    twice = sops.merge_state(once, [faster])
+    assert twice == [faster, unpinned]
+    assert sops.merge_state(twice, []) == twice
+    # another corpus is another configuration, carried alongside
+    other = {**faster, "sf_dir": "/other", "seconds": 1.0}
+    assert sops.merge_state(twice, [other]) == [faster, unpinned, other]

@@ -516,3 +516,39 @@ def test_merge_refuses_drifted_updates_schema(spark):
     SK.merge_upsert_partitioned(spark, path, ok, ["job_id", "rec_id"], ["job_id"])
     got = {(r.job_id, r.rec_id): r.payload for r in spark.read.parquet(path).collect()}
     assert got[(1, 0)] == "v2-upd"
+
+
+def test_merge_ignores_nested_nullability(spark):
+    """Spark reads a file schema back nullable all the way down, so an
+    updates frame whose array elements, struct fields or map values are
+    non-nullable is not schema drift: the merge must land, not refuse
+    the columns as re-typed."""
+
+    def nested(df):
+        return (
+            df.withColumn("tags", F.array(F.lit(1), F.lit(2)))
+            .withColumn(
+                "meta",
+                F.struct(
+                    F.lit("src").alias("k"),
+                    F.array(F.struct(F.lit(3).alias("z"))).alias("zs"),
+                ),
+            )
+            .withColumn("attrs", F.create_map(F.lit("a"), F.lit(4)))
+        )
+
+    path = tempfile.mkdtemp(prefix="hns_nested_")
+    SK.write_partitioned(nested(_jobs_df(spark, [0, 1], "v1")), path, ["job_id"])
+    upd = nested(
+        spark.createDataFrame(
+            [(1, 0, "v2-upd")], "job_id int, rec_id int, payload string"
+        )
+    )
+    assert not upd.schema["tags"].dataType.containsNull
+    SK.merge_upsert_partitioned(spark, path, upd, ["job_id", "rec_id"], ["job_id"])
+    got = {
+        (r.job_id, r.rec_id): (r.payload, r.tags, r.meta.zs[0].z, r.attrs["a"])
+        for r in spark.read.parquet(path).collect()
+    }
+    assert len(got) == 10
+    assert got[(1, 0)] == ("v2-upd", [1, 2], 3, 4)

@@ -111,32 +111,6 @@ def test_ann_recall_bounds(spark):
     assert ((df.recall_at_k >= 0) & (df.recall_at_k <= 1)).all()
 
 
-def test_lsh_salted_pairs_match_plain(spark):
-    """Hot-only block salting must produce the identical candidate set."""
-    from pyspark.sql import functions as F
-
-    from housenumbercore_spark.text import dedup as TD
-
-    bands = (
-        spark.range(400)
-        .select(F.col("id").alias("doc_id"))
-        .withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(3))))
-        .withColumn(
-            "bucket",
-            F.when(F.col("doc_id") % 10 == 0, F.lit(0)).otherwise(
-                F.pmod(F.hash("doc_id", "band"), F.lit(512)) + 1
-            ).cast("long"),
-        )
-    )
-    plain = TD.lsh_candidate_pairs(bands).toPandas()
-    salted = TD.lsh_candidate_pairs_salted(
-        bands, n_salt=4, hot_threshold=8
-    ).toPandas()
-    a = plain.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-    b = salted.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-    assert a.equals(b) and len(a) > 0
-
-
 def test_ngram_df_cap_drops_hot_shingles_but_keeps_exact_jaccard(spark):
     """A boilerplate shingle shared by every doc must not generate pairs
     when its DF exceeds the cap; pairs found via rare shingles keep EXACT
