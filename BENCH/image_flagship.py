@@ -26,7 +26,7 @@ scale-up and is now the production operator (images/assign.py).
 
 Run at two parallelism levels in fresh subprocesses (north-rule N vs 4N
 proxy), best-of-≤5 within a 30 s budget each:
-  python BENCH/image_flagship.py          # appends BENCH/BASELINE_extra.md
+  python BENCH/image_flagship.py          # appends BENCH/BASELINE.md
 """
 
 from __future__ import annotations
@@ -200,9 +200,9 @@ def main() -> None:
         "hardware-ceiling caveat as the scaling section: this VM's raw-CPU "
         "efficiency caps near 0.92 on 2→8 and 0.71 on 8→32.\n"
     )
-    extra = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BASELINE_extra.md")
-    with open(extra, "a") as f:
+    baseline = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BASELINE.md")
+    with open(baseline, "a") as f:
         f.write(md)
 
 

@@ -119,6 +119,8 @@ def _eff(a: dict, b: dict) -> float:
 
 
 ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "2"))
+# BASELINE.md line closing the section this script regenerates
+SECTION_END = "<!-- end of the scaling.py section: text below is kept on regeneration -->"
 
 
 def parent() -> None:
@@ -231,18 +233,19 @@ slow-query warning (MunicipalityJobs.java:314-318); this engine sustains
 tens of millions of rows/sec on one node.
 
 _Regenerate with `python BENCH/scaling.py`._
+{SECTION_END}
 """
-    # keep hand-maintained sections (headline timings etc.) across rewrites
-    extra_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BASELINE_extra.md"
-    )
-    if os.path.exists(extra_path):
-        with open(extra_path) as f:
-            md += "\n" + f.read()
-
+    # rewrite only this generated section; everything after its end marker
+    # (hand-kept and appended sections) is carried over unchanged
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
+    rest = ""
+    if os.path.exists(out_path):
+        with open(out_path) as f:
+            _, found, rest = f.read().partition(SECTION_END + "\n")
+        if not found:
+            raise SystemExit(f"{out_path} lacks the line {SECTION_END!r}")
     with open(out_path, "w") as f:
-        f.write(md)
+        f.write(md + rest)
 
 
 if __name__ == "__main__":

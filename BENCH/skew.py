@@ -16,7 +16,7 @@ pathology). Strategies:
 
 All three must return the identical row count (asserted). Run:
   python BENCH/skew.py            # prints one JSON line, appends to
-                                  # BENCH/BASELINE_extra.md
+                                  # BENCH/BASELINE.md
 """
 
 from __future__ import annotations
@@ -153,9 +153,9 @@ def main() -> None:
             "salted": f"explicit cell salting (n_salt={N_SALT})",
         }[r["strategy"]]
         md += f"| {label} | {r['seconds']} |\n"
-    extra = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BASELINE_extra.md")
-    with open(extra, "a") as f:
+    baseline = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BASELINE.md")
+    with open(baseline, "a") as f:
         f.write(md)
 
 

@@ -14,7 +14,7 @@ text.dedup.lsh_candidate_pairs) under:
 Both strategies must agree on the output pair count (asserted).
 
 MEASURED FINDING (best-of-3, 2M docs, one 4000-doc clone cluster, see
-BASELINE_extra.md): AQE wins here — plain 21.7 s, AQE 11.6 s, and a third
+BASELINE.md): AQE wins here — plain 21.7 s, AQE 11.6 s, and a third
 arm, hot-only block salting (n_salt=8: a bucket-size count job found the
 hot keys, whose rows then took a block-salted self-join), 35.1 s;
 whole-table salting measured 2.6x worse than plain. The sort-merge skew
@@ -25,7 +25,7 @@ the salted operator once this result made AQE the only policy. The
 opposite of the hot-cell broadcast-regime result in BENCH/skew.py — which
 is why the engine keeps AQE on everywhere and reserves explicit salting
 for the pip cell join. Run:
-  python BENCH/skew_lsh.py        # one JSON line + appends BASELINE_extra.md
+  python BENCH/skew_lsh.py        # one JSON line + appends BASELINE.md
 """
 
 from __future__ import annotations
@@ -125,9 +125,9 @@ def main() -> None:
             "aqe": "AQE skew-join splitting",
         }[r["strategy"]]
         md += f"| {label} | {r['seconds']} |\n"
-    extra = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BASELINE_extra.md")
-    with open(extra, "a") as f:
+    baseline = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BASELINE.md")
+    with open(baseline, "a") as f:
         f.write(md)
 
 

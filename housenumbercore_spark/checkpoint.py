@@ -138,7 +138,8 @@ def _manifest_path(out_dir: str, key) -> str:
 
 
 # All manifest I/O goes through the Hadoop FileSystem API (same rule as
-# sources/sinks.py and streaming/images.py): the data writes go through
+# sources/snapshots.py and streaming/images.py; helpers in
+# sources/sinks.py): the data writes go through
 # Spark, so on a non-local out_dir (hdfs://, s3a://) driver-local POSIX
 # calls would split manifests and data across two filesystems — a stale
 # LOCAL manifest could then silently skip recomputation of LOST remote

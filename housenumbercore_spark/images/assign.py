@@ -10,8 +10,8 @@ admin level and re-scanned by every downstream operator.
 ``assign_gated_images_to_areas`` restructures the pipeline:
 
 1. **Gate first** — every fact row's payload is verified ONCE against the
-   source table inside the JVM (byte-equal fast path; decode + PSNR only
-   for transformed rows — images/udfs.check_invariants).
+   source table inside the JVM (checksum fast path; decode + PSNR only
+   for mismatching rows — images/udfs.check_invariants_split).
 2. **Project narrow** — the binary column dies at the gate; the spatial
    join + tile assignment run on (image_id, lon, lat) with the gate
    verdicts, so the cell join, exact refine and tile map never touch
@@ -31,7 +31,6 @@ one scan pass regardless of how many admin levels cover each point.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators import pip_join as PJ
 from . import udfs as IU
@@ -47,8 +46,6 @@ def assign_gated_images_to_areas(
     tile_res: int | None = None,
     src_id_col: str | None = None,
     broadcast_src: bool = True,
-    gate: str = "digest",
-    readmit_lossy: bool = False,
     **pip_kwargs,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (assignments, quarantine).
@@ -62,69 +59,43 @@ def assign_gated_images_to_areas(
     reconcile totals as |verified ids| = |input| − |quarantine ids|, not
     against the assignment row count.
     quarantine: gate verdicts (image_id, psnr_db, pixels_ok, caption_ok,
-    lon, lat) for every row withheld from the assignment input. With
-    ``gate="bytes"`` (or ``readmit_lossy=True``) that is exactly the rows
-    failing the pixel/caption invariant; with the default digest gate it
-    is every row failing the CHECKSUM gate — including a lossy re-encode
-    whose decoded pixels pass the PSNR floor, which appears here with
-    ``pixels_ok=True`` (see row routing below).
+    lon, lat) for every row withheld from the assignment input: every row
+    failing the CHECKSUM gate — including a lossy re-encode whose decoded
+    pixels pass the PSNR floor, which appears here with ``pixels_ok=True``
+    (see row routing below).
 
     ``src_df`` defaults to ``images`` itself (self-check: catches payload
     corruption introduced upstream of this operator only when ids are
     derived — pass the true source for end-to-end verification).
     ``src_id_col`` maps derived fact ids (replica suffixes) back to source
-    ids. ``broadcast_src`` defaults True: with the default ``gate="digest"``
-    the broadcast side is ~40 B/row checksums, buildable at any dimension
-    size; set False when the source is genuinely fact-sized (the digest
-    join then shuffles narrow checksums, never payloads).
-    ``gate`` defaults ``"digest"`` (checksums compared in codegen, payload
-    fetched + decoded only for mismatch rows — see
-    images/udfs.check_invariants_split): a payload-carrying ``"bytes"``
-    broadcast is serial driver work that dominates wall time once the join
-    side runs narrow (measured in BENCH/image_flagship.py: the byte-gate
-    stage alone scaled 0.556 on 2→8 threads). Verdicts identical up to
-    ~2⁻¹⁶⁰ checksum collision; pass ``gate="bytes"`` for strict byte
-    comparison.
+    ids. ``broadcast_src`` defaults True: the broadcast side is ~40 B/row
+    checksums, buildable at any dimension size; set False when the source
+    is genuinely fact-sized (the digest join then shuffles narrow
+    checksums, never payloads).
 
-    Digest-mode row routing: assignments build on the digest-PASSED frame
-    only, so their lineage is one narrow pass with no decode machinery —
-    the deliberate trade is that an invariant-PASSING lossy re-encode is
+    The gate is the digest plan (images/udfs.check_invariants_split:
+    checksums compared in codegen, payload fetched + decoded only for
+    mismatch rows): a payload-carrying byte-gate broadcast is serial
+    driver work that dominates wall time once the join side runs narrow
+    (measured in BENCH/image_flagship.py: the byte-gate stage alone scaled
+    0.556 on 2→8 threads).
+
+    Row routing: assignments build on the digest-PASSED frame only, so
+    their lineage is one narrow pass with no decode machinery — the
+    deliberate trade is that an invariant-PASSING lossy re-encode is
     withheld from assignments (quarantined with ``pixels_ok=True``, never
-    silently dropped) unless ``readmit_lossy=True`` unions such rows back
-    into the assignment input. Re-admission restores byte-gate assignment
-    semantics at the cost of carrying the decode subplan (and the payload
-    refetch join) inside the assignments lineage, which forfeits the
-    pure-codegen narrow plan; leave it False when upstream never
-    re-encodes (then any quarantine row IS a violation) or when a
-    downstream pass re-admits from the quarantine verdicts explicitly.
-    Every input row lands in exactly one of (verified, quarantine); only
-    verified rows proceed to the spatial join.
+    silently dropped); a downstream pass may re-admit it from the
+    quarantine verdicts. Every input row lands in exactly one of
+    (verified, quarantine); only verified rows proceed to the spatial
+    join.
     """
-    src = src_df if src_df is not None else images
-    ok = F.col("pixels_ok") & F.col("caption_ok")
-    if gate == "digest":
-        passed, refined = IU.check_invariants_split(
-            images, src,
-            keep_cols=(lon, lat),
-            src_id_col=src_id_col,
-            broadcast_src=broadcast_src,
-        )
-        if readmit_lossy:
-            verified = passed.unionByName(refined.filter(ok))
-            quarantine = refined.filter(~ok)
-        else:
-            verified = passed
-            quarantine = refined
-    else:
-        checked = IU.check_invariants(
-            images, src,
-            keep_cols=(lon, lat),
-            src_id_col=src_id_col,
-            broadcast_src=broadcast_src,
-            gate=gate,
-        )
-        verified = checked.filter(ok)
-        quarantine = checked.filter(~ok)
+    verified, quarantine = IU.check_invariants_split(
+        images,
+        src_df if src_df is not None else images,
+        keep_cols=(lon, lat),
+        src_id_col=src_id_col,
+        broadcast_src=broadcast_src,
+    )
     assigned = PJ.assign_points_to_areas(
         spark,
         verified.select("image_id", "psnr_db", lon, lat),

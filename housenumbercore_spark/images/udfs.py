@@ -7,6 +7,8 @@ PSNR ≥ 40 dB for lossy) and byte-equal captions vs the source table.
 ``check_invariants`` joins pipeline output back to the source on image_id
 and decodes BOTH payloads inside one ``mapInPandas`` — catching any
 corruption introduced by shuffles, codec round-trips, or column handling.
+``check_invariants_split`` is the checksum (digest) plan of the same gate,
+split into (passed, suspects) for the gate-early pipeline.
 """
 
 from __future__ import annotations
@@ -74,7 +76,6 @@ def check_invariants(
     keep_cols: tuple[str, ...] = (),
     src_id_col: str | None = None,
     broadcast_src: bool = False,
-    gate: str = "bytes",
 ) -> DataFrame:
     """→ (image_id, psnr_db, pixels_ok, caption_ok [, *keep_cols]), one row
     per output row.
@@ -97,31 +98,17 @@ def check_invariants(
     src is dimension-sized but over Catalyst's auto threshold (payload
     bytes inflate the size estimate past 10 MB long before the row count
     stops being broadcastable; an SMJ here would shuffle fact payloads).
-    ``gate``: how the fast-path equality is established.
-      * ``"bytes"`` (default) — the source PAYLOAD joins in and the JVM
-        compares full byte strings. Strict, but building a payload-carrying
-        broadcast is serial driver work that dominates wall time as the
-        parallel fraction shrinks (measured: the gate stage alone scaled
-        0.556 on 2→8 threads and went NEGATIVE 8→32).
-      * ``"digest"`` — the broadcast side carries only content checksums
-        (two independent xxhash64 streams + crc32 + length, joint
-        collision odds ~2⁻¹⁶⁰ — the parquet/Iceberg integrity model);
-        equality is established by recomputing the checksums on the fact
-        payload in codegen, so the broadcast is ~40 B/row and the gate is
-        a pure map over the fact scan. Rows failing the digest fetch the
-        source payload via a second (tiny) join and still decode to a real
-        PSNR — verdicts are identical to ``"bytes"`` up to checksum
-        collision. This is the 10¹²-row shape.
+
+    The fast-path equality is strict: the source PAYLOAD joins in and the
+    JVM compares full byte strings. On a whole-table check like the
+    ``image_invariants`` query this plan measured faster than the digest
+    plan of :func:`check_invariants_split`, with identical verdicts; the
+    digest plan wins where building the payload-carrying broadcast is
+    serial driver work that dominates wall time (the gate-early pipeline,
+    images/assign.py).
     """
-    if gate not in ("bytes", "digest"):
-        raise ValueError(f"gate must be 'bytes' or 'digest', got {gate!r}")
     o = _gate_projection(out_df, id_col, bytes_col, caption_col,
                          keep_cols, src_id_col)
-    if gate == "digest":
-        return _check_invariants_digest(
-            o, src_df, id_col, bytes_col, caption_col, keep_cols,
-            broadcast_src,
-        )
     s = src_df.select(
         F.col(id_col).alias("__sid"),
         F.col(bytes_col).alias("__sb"),
@@ -229,31 +216,38 @@ def _digest_cols(b):
     )
 
 
-def _digest_gate_split(
-    o: DataFrame,
+def check_invariants_split(
+    out_df: DataFrame,
     src_df: DataFrame,
-    id_col: str,
-    bytes_col: str,
-    caption_col: str,
-    keep_cols: tuple[str, ...],
-    broadcast_src: bool,
+    id_col: str = "image_id",
+    bytes_col: str = "bytes",
+    caption_col: str = "caption",
+    keep_cols: tuple[str, ...] = (),
+    src_id_col: str | None = None,
+    broadcast_src: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Digest gate as a two-frame split: → (passed, suspects_refined).
+    """Digest gate split for pipeline composition: → (passed, suspects).
+
+    The broadcast side carries only content checksums (two independent
+    xxhash64 streams + crc32 + length, joint collision odds ~2⁻¹⁶⁰ — the
+    parquet/Iceberg integrity model), recomputed on the fact payload in
+    codegen, so the broadcast is ~40 B/row and the gate is a pure map over
+    the fact scan: the 10¹²-row shape. ``passed ∪ suspects`` holds one row
+    per output row, with the verdicts of :func:`check_invariants` up to
+    checksum collision.
 
     ``passed``: rows whose payload checksums AND caption match the source —
-    a SINGLE pass over the fact scan (narrow broadcast join + codegen
-    checksum compare), no Python, no payload movement, no union. This is
-    the frame downstream operators should build on: its lineage carries
-    none of the decode machinery.
-    ``suspects_refined``: rows failing the fast gate, LEFT-joined back to
-    the source payload and decode-refined to a real PSNR — so a lossy
-    re-encode (bytes differ, pixels close) shows up here with
-    ``pixels_ok=True`` and can be re-admitted by the caller, while true
-    corruption carries its measured PSNR. This frame's payload refetch
-    re-scans the source table, the right trade at scale exactly because it
-    only pays when corruption or transformation actually happened — and
-    only when the caller materializes it.
+    one narrow-broadcast-join pass with no Python, no payload movement and
+    no union; downstream operators build on it.
+    ``suspects``: rows failing the fast gate, LEFT-joined back to the
+    source payload and decode-refined to a real PSNR — a lossy re-encode
+    (bytes differ, pixels close) shows up here with ``pixels_ok=True``,
+    true corruption with its measured PSNR. Its payload refetch re-scans
+    the source table, which pays only when corruption or transformation
+    happened and the caller materializes the frame.
     """
+    o = _gate_projection(out_df, id_col, bytes_col, caption_col,
+                         keep_cols, src_id_col)
     h1, h2, crc, ln = _digest_cols(F.col(bytes_col))
     s = src_df.select(
         F.col(id_col).alias("__sid"),
@@ -321,50 +315,6 @@ def _digest_gate_split(
         )
     )
     return passed, refined
-
-
-def _check_invariants_digest(
-    o: DataFrame,
-    src_df: DataFrame,
-    id_col: str,
-    bytes_col: str,
-    caption_col: str,
-    keep_cols: tuple[str, ...],
-    broadcast_src: bool,
-) -> DataFrame:
-    """Digest-gate body of :func:`check_invariants` (``gate="digest"``):
-    the two-frame split re-unioned, preserving the one-row-per-output-row
-    contract and byte-gate verdict semantics (up to checksum collision)."""
-    passed, refined = _digest_gate_split(
-        o, src_df, id_col, bytes_col, caption_col, keep_cols, broadcast_src
-    )
-    return passed.unionByName(refined)
-
-
-def check_invariants_split(
-    out_df: DataFrame,
-    src_df: DataFrame,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    caption_col: str = "caption",
-    keep_cols: tuple[str, ...] = (),
-    src_id_col: str | None = None,
-    broadcast_src: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Digest gate split for pipeline composition: → (passed, suspects).
-
-    Same verdict semantics as ``check_invariants(gate="digest")`` (their
-    union IS that result), but exposed as two frames so downstream
-    operators can build on ``passed`` — whose lineage is a single
-    narrow-broadcast-join pass with zero Python and zero payload joins —
-    while ``suspects`` (decode-refined verdicts with real PSNR, payload
-    refetch) only executes when the caller materializes it.
-    """
-    o = _gate_projection(out_df, id_col, bytes_col, caption_col,
-                         keep_cols, src_id_col)
-    return _digest_gate_split(
-        o, src_df, id_col, bytes_col, caption_col, keep_cols, broadcast_src
-    )
 
 
 def _violation_aggs() -> list:

@@ -125,8 +125,8 @@ def match_evaluation(
     match across sides — a deliberate choice, not an oversight: the
     reference evaluates these joins in PostgreSQL, whose ``=`` has the
     same NULL semantics, so an official row and an OSM row that agree
-    only up to a NULL key count as 'l' + 'o' there too. (The merge/upsert
-    sinks differ: their keys are row identities, where NULL must match
+    only up to a NULL key count as 'l' + 'o' there too. (The Workcache
+    merge differs: its keys are row identities, where NULL must match
     NULL for the diff to converge — see operators/merge.py.)
     """
     join_cols = [*keys, hnr_key]

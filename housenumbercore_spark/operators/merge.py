@@ -26,12 +26,11 @@ def merge_actions(
     """Full-outer diff: one row per key with action ∈ insert/update/
     unchanged/delete plus the surviving (post-merge) values.
 
-    Keys join NULL-SAFELY (NULL = NULL), like the hardened upsert sinks
-    (sinks.merge_upsert_partitioned, snapshots.merge_upsert_snapshot_table):
-    a plain equality join would split a NULL-keyed row into a perpetual
-    delete+insert pair and the diff would never converge. The reference's
-    Workcache keys are primary keys (non-NULL), so behavior there is
-    unchanged."""
+    Keys join NULL-SAFELY (NULL = NULL), like the Workcache merge
+    (snapshots.merge_upsert_snapshot_table): a plain equality join would
+    split a NULL-keyed row into a perpetual delete+insert pair and the
+    diff would never converge. The reference's Workcache keys are primary
+    keys (non-NULL), so behavior there is unchanged."""
     import functools
 
     b = base.select(

@@ -212,9 +212,10 @@ def merge_counters_sql() -> str:
 
 
 def merge_upsert_snapshot_sql() -> str:
-    """Expected on-disk table after the partitioned upsert sink commits the
-    diff: every update/insert row, plus base rows neither updated
-    (source_id % 13 = 0 set is absent from updates) nor deleted (% 26)."""
+    """Expected snapshot table after the Workcache merge
+    (snapshots.merge_upsert_snapshot_table) commits the diff: every
+    update/insert row, plus base rows neither updated (source_id % 13 = 0
+    set is absent from updates) nor deleted (% 26)."""
     return _merge_ctes() + """
 SELECT source_id, street, housenumber FROM updates
 UNION ALL

@@ -470,28 +470,29 @@ def merge_action_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8/M3 through the partitioned upsert SINK, end to end: write the base
-    table, commit the Workcache diff (updates + deletes, single-write
-    partition swap — sources/sinks.py), read the table back. Verifies the
-    on-disk merge result itself, not just the diff DataFrame: updated keys
-    replaced, inserts present, deleted keys (source_id % 26 == 0) gone,
-    untouched rows intact. Reference: Workcache.java:243-424 write-back."""
+    """S8/M3 through the Workcache merge, end to end: write the base table
+    as a snapshot, commit the diff (updates + deletes) as one snapshot
+    merge (sources/snapshots.merge_upsert_snapshot_table), read the table
+    back. Verifies the on-disk merge result itself, not just the diff
+    DataFrame: updated keys replaced, inserts present, deleted keys
+    (source_id % 26 == 0) gone, untouched rows intact. Reference:
+    Workcache.java:243-424 write-back."""
     import tempfile
 
-    from .sources import sinks as SK
+    from .sources import snapshots as SN
 
     base, updates = _merge_inputs(spark, sf_dir)
     part = (F.col("source_id") % 8).cast("int").alias("part")
     path = tempfile.mkdtemp(prefix="hns_upsert_")
-    SK.write_partitioned(base.select("*", part), path, ["part"], dynamic=False)
+    SN.snapshot_write(base.select("*", part), path, ["part"])
     # keys absent from updates are the diff's DELETE set; drop every other
     # one (% 26) so the snapshot keeps genuinely untouched rows too
     deletes = base.filter(F.col("source_id") % 26 == 0).select("source_id")
-    SK.merge_upsert_partitioned(
-        spark, path, updates.select("*", part), ["source_id"], ["part"],
+    SN.merge_upsert_snapshot_table(
+        spark, path, updates.select("*", part), ["source_id"],
         deletes=deletes,
     )
-    merged = spark.read.parquet(path).select(
+    merged = SN.read_snapshot(spark, path).select(
         "source_id", "street", "housenumber"
     )
     return _materialize_then_rm(merged, path)

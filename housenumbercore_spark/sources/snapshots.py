@@ -3,11 +3,10 @@ scratch — snapshot isolation, time travel, rollback, vacuum.
 
 The reference keeps an evaluation visible while its municipality is being
 recomputed (Workcache.java:2-20 — readers see the old rows until the
-per-municipality transaction commits). sinks.py reproduces the COMMIT with
-partition-directory swaps but, as its docstring concedes, cannot give
-readers a pinned view: a reader that lists files mid-swap can see the new
-data. This module closes that gap with the (public) Iceberg metadata
-pattern over plain parquet — no Iceberg runtime exists in this sandbox:
+per-municipality transaction commits). This module gives readers that
+pinned view, and the Workcache write-back its one commit
+(:func:`merge_upsert_snapshot_table`), with the (public) Iceberg metadata
+pattern over plain parquet — no Iceberg runtime is required:
 
 - every write lands in a fresh immutable directory under ``data/``;
 - a snapshot is a JSON manifest (``_meta/v<N>.json``) listing the data
@@ -44,8 +43,9 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from .sinks import _hadoop_fs
+from .sinks import _fs_find_partition_dir, _hadoop_fs
 
 META = "_meta"
 DATA = "data"
@@ -462,8 +462,6 @@ def read_snapshot(
 
     from pyspark.sql import functions as F
 
-    from .sinks import _fs_find_partition_dir
-
     v = version if version is not None else current_version(spark, table)
     if v is None:
         raise FileNotFoundError(f"{table} has no committed snapshot")
@@ -493,10 +491,13 @@ def read_snapshot(
                     for p in e["partitions"]
                 )
             ]
+    # the manifest schema pins every column's type on read: partition-type
+    # INFERENCE runs per data dir and would re-type a numeric-looking
+    # string partition ('07' → int 7) in a dir holding only such values,
+    # forking the column's type across entries
+    schema = T.StructType.fromJson(snap["schema"])
     if not entries:
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(snap["schema"]))
+        return spark.createDataFrame([], schema)
 
     # entries narrowed by overwrite_partitions (rows=None) carry only a
     # SUBSET of their directory's partitions — read exactly those leaf
@@ -507,7 +508,7 @@ def read_snapshot(
     # a multi-path read across dirs trips CONFLICTING_DIRECTORY_STRUCTURES);
     # commit count bounds the union width, vacuum/compaction keeps it small
     parts = [
-        spark.read.parquet(f"{table}/{e['dir']}")
+        spark.read.schema(schema).parquet(f"{table}/{e['dir']}")
         for e in entries
         if e.get("rows") is not None
     ]
@@ -535,13 +536,58 @@ def read_snapshot(
                 leaves.append("/".join([base] + rel))
             if leaves:
                 parts.append(
-                    spark.read.option("basePath", base).parquet(*leaves)
+                    spark.read.schema(schema)
+                    .option("basePath", base)
+                    .parquet(*leaves)
                 )
     df = reduce(lambda a, b: a.unionByName(b), parts)
     if partition_filter:
         for c, want in partition_filter.items():
             df = df.filter(F.col(c).eqNullSafe(F.lit(want)))
     return df
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested array element, map value and struct field
+    nullable — the form Spark reads back from a file footer, whatever the
+    nullability of the frame that wrote it."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    return dt
+
+
+def _refuse_schema_drift(
+    table: str, updates: T.StructType, table_schema: dict
+) -> None:
+    """Raise unless ``updates`` has the table's columns and types
+    (``table_schema``: the manifest's JSON schema; nullability ignored at
+    every depth). Driver-side metadata only: no Spark job, no file read."""
+    have = {
+        f.name: _nullable(f.dataType)
+        for f in T.StructType.fromJson(table_schema).fields
+    }
+    got = {f.name: _nullable(f.dataType) for f in updates.fields}
+    if have == got:
+        return
+    retyped = sorted(c for c in set(have) & set(got) if have[c] != got[c])
+    raise ValueError(
+        f"merge_upsert_snapshot_table: updates schema drifts from the "
+        f"table at {table} — missing from updates: "
+        f"{sorted(set(have) - set(got))}, absent from the table: "
+        f"{sorted(set(got) - set(have))}, re-typed: "
+        f"{[(c, str(have[c]), str(got[c])) for c in retyped]}. Merging "
+        "would silently drop, widen or fail on these columns; align the "
+        "updates frame with the table schema (or migrate the table) first."
+    )
 
 
 def merge_upsert_snapshot_table(
@@ -551,11 +597,16 @@ def merge_upsert_snapshot_table(
     keys: list[str],
     deletes: DataFrame | None = None,
 ) -> int:
-    """The Workcache diff protocol (Workcache.java:243-424) as ONE snapshot
-    commit with full isolation — the versioned-table counterpart of
-    sinks.merge_upsert_partitioned (same merge semantics, same null-safe
-    key handling), but readers keep the pre-merge snapshot until the
-    atomic pointer flip, and the pre-merge version stays time-travelable.
+    """The Workcache diff protocol (Workcache.java:243-424: new → INSERT,
+    changed → UPDATE, gone → DELETE) as ONE snapshot commit — the engine's
+    only merge write-back. Keys match null-safely; readers keep the
+    pre-merge snapshot until the atomic pointer flip, and the pre-merge
+    version stays time-travelable.
+
+    ``updates`` must carry exactly the table's columns and types (nested
+    nullability aside): drift raises ``ValueError`` naming the missing,
+    extra and re-typed columns, checked against the manifest before any
+    Spark job runs. ``deletes`` is an optional key frame (the DELETE set).
 
     Per touched partition (updates' partitions ∪ current partitions of
     updated/deleted keys — an update that moves a key between partitions
@@ -581,6 +632,7 @@ def merge_upsert_snapshot_table(
     partition_cols = snap["partition_cols"]
     if not partition_cols:
         raise ValueError("merge needs a partitioned snapshot table")
+    _refuse_schema_drift(table, updates.schema, snap["schema"])
     current = read_snapshot(spark, table, version=v)
     # canonicalize '' partition values to NULL before any comparison —
     # hive storage conflates them, and current (read back from disk)

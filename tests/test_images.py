@@ -577,9 +577,15 @@ class TestGateEarlyAssign:
         assert "CartesianProduct" not in plan, plan
 
 
+def _split_union(out, src, **kw):
+    passed, refined = IU.check_invariants_split(out, src, **kw)
+    return passed.unionByName(refined)
+
+
 class TestDigestGate:
-    """gate="digest": checksum fast path + payload-refetch decode fallback
-    must produce verdicts identical to the byte gate."""
+    """check_invariants_split: checksum fast path + payload-refetch decode
+    fallback must produce verdicts identical to the byte gate of
+    check_invariants."""
 
     @pytest.fixture(scope="class")
     def images(self, spark):
@@ -626,13 +632,14 @@ class TestDigestGate:
     def test_digest_verdicts_match_byte_gate(self, spark, images, mutated):
         cols = ["image_id", "pixels_ok", "caption_ok", "psnr_db"]
         by = (
-            IU.check_invariants(mutated, images, gate="bytes")
+            IU.check_invariants(mutated, images)
             .select(cols).toPandas().set_index("image_id").sort_index()
         )
         dg = (
-            IU.check_invariants(mutated, images, gate="digest")
+            _split_union(mutated, images)
             .select(cols).toPandas().set_index("image_id").sort_index()
         )
+        assert list(by.index) == list(dg.index)
         assert (by.pixels_ok == dg.pixels_ok).all()
         assert (by.caption_ok == dg.caption_ok).all()
         # diff rows decode to the SAME real PSNR in both modes
@@ -647,23 +654,16 @@ class TestDigestGate:
         assert r9.pixels_ok and 40.0 <= r9.psnr_db < 999.0
 
     def test_digest_keep_cols_and_summary(self, spark, images, mutated):
-        chk = IU.check_invariants(
-            mutated, images, gate="digest", keep_cols=("lon", "lat")
-        )
+        chk = _split_union(mutated, images, keep_cols=("lon", "lat"))
         assert {"lon", "lat"}.issubset(chk.columns)
         summ = IU.invariant_summary(chk).collect()[0]
         assert summ.n_rows == 60
         assert summ.n_pixel_violations == 3
         assert summ.n_caption_violations == 2  # tampered + renamed id
 
-    def test_digest_gate_rejects_unknown_mode(self, spark, images):
-        with pytest.raises(ValueError, match="gate"):
-            IU.check_invariants(images, images, gate="md5")
-
 
 class TestDigestSplitRouting:
-    """Digest-mode assign: passed-frame assignments, no silent drops,
-    lossy re-admission."""
+    """Digest-gate assign: passed-frame assignments, no silent drops."""
 
     SF = "/root/testdata/sf0.001"
 
@@ -712,26 +712,6 @@ class TestDigestSplitRouting:
         assert assigned.filter(
             F.col("image_id") == "img0000000008"
         ).count() == 0
-
-    def test_readmit_lossy(self, spark, images, areas, lossy):
-        from housenumbercore_spark.images.assign import (
-            assign_gated_images_to_areas,
-        )
-        from housenumbercore_spark.operators import pip_join as PJ
-
-        assigned, quarantine = assign_gated_images_to_areas(
-            spark, lossy, areas, src_df=images, readmit_lossy=True
-        )
-        assert quarantine.count() == 0
-        direct = PJ.assign_points_to_areas(
-            spark, images.select("image_id", "lon", "lat"), areas
-        )
-        assert assigned.count() == direct.count()
-        assert assigned.filter(
-            F.col("image_id") == "img0000000008"
-        ).count() == direct.filter(
-            F.col("image_id") == "img0000000008"
-        ).count()
 
     def test_digest_assignments_lineage_is_single_pass(
         self, spark, images, areas
@@ -867,7 +847,10 @@ class TestCaptionMissViolation:
             [("ghost", bytearray(codec.encode_png(IMG.make_pixels(2))), None)],
             "image_id string, bytes binary, caption string",
         )
-        for gate in ("bytes", "digest"):
-            row = IU.check_invariants(out, src, gate=gate).collect()[0]
-            assert row.pixels_ok is False, gate
-            assert row.caption_ok is False, gate
+        for name, chk in (
+            ("check_invariants", IU.check_invariants(out, src)),
+            ("check_invariants_split", _split_union(out, src)),
+        ):
+            row = chk.collect()[0]
+            assert row.pixels_ok is False, name
+            assert row.caption_ok is False, name

@@ -231,8 +231,7 @@ class TestMergeOnSnapshot:
     def test_merge_diff_protocol_with_isolation(self, spark, table):
         """The Workcache diff as one snapshot commit: updates replace,
         inserts land, deletes vanish, untouched partitions are carried by
-        metadata — and the pre-merge version stays readable (the isolation
-        the directory-swap sink cannot give)."""
+        metadata — and the pre-merge version stays readable."""
         updates = _df(
             spark,
             [(1, 1, "upd-1"), (100, 2, "new-100")],
@@ -259,7 +258,7 @@ class TestMergeOnSnapshot:
 
     def test_merge_partition_move_drops_stale_copy(self, spark, table):
         """An update that moves a key to another partition rewrites the
-        key's OLD partition too (same guarantee as the sink's fix)."""
+        key's OLD partition too."""
         updates = _df(spark, [(5, 0, "moved-5")])  # 5 lived in bucket 1
         SN.merge_upsert_snapshot_table(spark, table, updates, ["id"])
         rows = [r for r in SN.read_snapshot(spark, table).collect() if r.id == 5]
@@ -278,6 +277,31 @@ class TestMergeOnSnapshot:
         )
         got = [(r.id, r.bucket) for r in SN.read_snapshot(spark, t).collect()]
         assert got == [(1, 0)]
+
+    def test_drift_guard_adds_no_spark_job(self, spark, monkeypatch):
+        """The schema-drift guard compares schemas from the manifest the
+        merge already loaded: a merge runs exactly as many Spark jobs with
+        the guard as with the guard stubbed out."""
+        sc = spark.sparkContext
+
+        def merge_jobs(group):
+            t = tempfile.mkdtemp(prefix="hns_snapjobs_") + "/tbl"
+            SN.snapshot_write(
+                _df(spark, [(i, i % 4, f"v1-{i}") for i in range(20)]),
+                t,
+                ["bucket"],
+            )
+            updates = _df(spark, [(1, 1, "upd-1"), (100, 2, "new-100")])
+            sc.setJobGroup(group, group)
+            try:
+                SN.merge_upsert_snapshot_table(spark, t, updates, ["id"])
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        guarded = merge_jobs("hns-drift-guard-on")
+        monkeypatch.setattr(SN, "_refuse_schema_drift", lambda *a: None)
+        assert merge_jobs("hns-drift-guard-off") == guarded > 0
 
     def test_merge_empty_string_partition_value(self, spark):
         """'' and NULL are ONE partition under hive storage: an update
