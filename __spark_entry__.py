@@ -356,6 +356,7 @@ def oracle_sql() -> dict[str, str]:
     from housenumbercore_spark import pipelines as P
     from housenumbercore_spark.streaming.stateful import user_running_stats_sql
     from housenumbercore_spark.text import oracles as TO
+    from housenumbercore_spark.text.hashing import h60_duck
     from housenumbercore_spark.vectors import oracles as VO
 
     from housenumbercore_spark.pipelines import (
@@ -513,9 +514,9 @@ def oracle_sql() -> dict[str, str]:
         "checkpoint_lineage": (
             "SELECT CAST(point_id % 4 AS VARCHAR) AS partition, "
             "'driver' AS input_fingerprint, COUNT(*) AS row_count, "
-            "bit_xor(('0x' || substr(md5("
-            "'{\"point_id\":' || point_id || ',\"tile_id\":' || tile_id || '}'"
-            "), 1, 15))::BIGINT) AS value_digest "
+            "bit_xor(" + h60_duck(
+                "'{\"point_id\":' || point_id || ',\"tile_id\":' || tile_id || '}'"
+            ) + ") AS value_digest "
             f"FROM (SELECT point_id, {cell_sql('lon', 'lat', TILE_RES)} AS tile_id "
             f"FROM {pts} p) t GROUP BY point_id % 4"
         ),

@@ -39,6 +39,8 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .text.hashing import h60_spark
+
 MANIFEST_NAME = "_MANIFEST.json"
 
 
@@ -69,9 +71,7 @@ class PartitionManifest:
 # columns. Single source of truth — the manifest writer (compute_stats) and
 # the verifier (compute_digest) must agree bit for bit or every
 # resume/verify comparison breaks.
-_ROW_DIGEST_SQL = (
-    "cast(conv(substring(md5(to_json(struct(*))), 1, 15), 16, 10) as bigint)"
-)
+_ROW_DIGEST_SQL = h60_spark("to_json(struct(*))")
 
 
 def row_digest_col():

@@ -40,11 +40,6 @@ MAX_RES = 26
 _RES_SHIFT = 58
 _IX_SHIFT = 29
 
-# Default resolutions used by the operators: polygons are covered at
-# COVER_RES, points encoded at the same res for the equi-join.
-DEFAULT_COVER_RES = 7
-
-
 # ---------------------------------------------------------------------------
 # numpy kernel
 # ---------------------------------------------------------------------------

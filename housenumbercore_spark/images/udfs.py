@@ -362,6 +362,20 @@ def invariant_gate_summary(check_df: DataFrame) -> DataFrame:
     )
 
 
+def _self_check(buf, stored_phash) -> tuple[int, int, str, bool]:
+    """Per-row self-check of one stored image: decode the payload, read its
+    dims and container format, and recompute its phash against the stored
+    one → (w, h, fmt, phash_ok). Any failure (corrupt or NULL payload,
+    NULL phash) yields (-1, -1, '?', False)."""
+    try:
+        b = bytes(buf)
+        px = codec.decode_image(b)
+        return (px.shape[1], px.shape[0], codec.sniff_fmt(b) or "?",
+                codec.phash64(px) == int(stored_phash))
+    except Exception:
+        return (-1, -1, "?", False)
+
+
 def decode_check(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Per-row decode verification with SQL-predictable outputs:
     (image_id, w_decoded, h_decoded, fmt_decoded, phash_match).
@@ -389,18 +403,10 @@ def decode_check(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     def gen(batches):
         codec.install_registry(snap)
         for pdf in batches:
-            rows = []
-            for iid, buf, ph in zip(pdf["image_id"], pdf["__b"], pdf["phash"]):
-                try:
-                    b = bytes(buf)
-                    px = codec.decode_image(b)
-                    rows.append(
-                        (iid, px.shape[1], px.shape[0],
-                         codec.sniff_fmt(b) or "?",
-                         codec.phash64(px) == int(ph))
-                    )
-                except Exception:
-                    rows.append((iid, -1, -1, "?", False))
+            rows = [
+                (iid, *_self_check(buf, ph))
+                for iid, buf, ph in zip(pdf["image_id"], pdf["__b"], pdf["phash"])
+            ]
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
     return src.mapInPandas(gen, schema)

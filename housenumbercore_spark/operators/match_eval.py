@@ -48,21 +48,6 @@ def osm_tag_priority(tags: Column | str) -> Column:
     return F.least(p_entrance, p_building, p_amenity)
 
 
-def tag_priority_from_columns(building: Column, entrance: Column, amenity: Column) -> Column:
-    """Same ladder from flat columns (for SQL-oracle-matched synthetic data)."""
-    b = F.lower(F.coalesce(building, F.lit("")))
-    e = F.lower(F.coalesce(entrance, F.lit("")))
-    p_entrance = F.when(e.isin("yes", "main", "home"), 1).otherwise(99)
-    p_building = (
-        F.when(b == "entrance", 1)
-        .when(b.isin("yes", "office", "apartments"), 2)
-        .when(b != "", 9)
-        .otherwise(99)
-    )
-    p_amenity = F.when(amenity.isNotNull(), 20).otherwise(99)
-    return F.least(p_entrance, p_building, p_amenity)
-
-
 def tag_priority_sql(building: str, entrance: str, amenity: str) -> str:
     """ANSI-SQL twin of the priority ladder (DuckDB oracle)."""
     b = f"lower(coalesce({building}, ''))"

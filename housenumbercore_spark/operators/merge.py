@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ACTIONS = ("insert", "update", "unchanged", "delete")
-
 
 def merge_actions(
     base: DataFrame,

@@ -50,13 +50,11 @@ REFINE_COLS = (
     "__pj_full", "__pj_ref_x", "__pj_ref_y", "__pj_ref_inside", "__pj_edges"
 )
 
-import os
-
 # Cover granularity trades boundary-cell share (finer → fewer refine
 # rows) against broadcast-map size (finer → slower hash probes). Measured
 # on the sf0.1 flagship: 256 cells/area beats 1024 by ~35% wall — probe
 # locality wins over refine savings here.
-COVER_MAX_CELLS_PER_AREA = int(os.environ.get("SPARK_GRAFT_COVER_CELLS", "256"))
+COVER_MAX_CELLS_PER_AREA = 256
 
 
 def pick_join_res(areas: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax"),

@@ -947,6 +947,7 @@ def stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine genuinely decodes every payload in a streaming microbatch."""
     import tempfile
 
+    from .sources.snapshots import read_snapshot
     from .streaming import images as SI
 
     base = tempfile.mkdtemp(prefix="hns_sgate_")
@@ -955,20 +956,9 @@ def stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src, 0, N_GATE_IMAGES, corrupt_every=GATE_CORRUPT_EVERY
     )
     SI.run_image_gate(spark, src, out, ckpt)
-    acc = (
-        SI.read_gated(spark, out, "accepted")
-        .groupBy("fmt")
-        .agg(F.count(F.lit(1)).alias("n_accepted"))
-    )
-    rej = (
-        SI.read_gated(spark, out, "rejected")
-        .groupBy("fmt")
-        .agg(F.count(F.lit(1)).alias("n_rejected"))
-    )
-    counts = acc.join(rej, "fmt", "full_outer").select(
-        "fmt",
-        F.coalesce("n_accepted", F.lit(0)).alias("n_accepted"),
-        F.coalesce("n_rejected", F.lit(0)).alias("n_rejected"),
+    counts = read_snapshot(spark, out).groupBy("fmt").agg(
+        F.count(F.when(F.col("gate_ok"), 1)).alias("n_accepted"),
+        F.count(F.when(~F.col("gate_ok"), 1)).alias("n_rejected"),
     )
     return _materialize_then_rm(counts, base)
 

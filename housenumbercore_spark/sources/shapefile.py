@@ -40,13 +40,6 @@ SHAPE_POINT = 1
 SHAPE_POLYLINE = 3
 SHAPE_POLYGON = 5
 
-_SHAPE_NAMES = {
-    SHAPE_NULL: "null",
-    SHAPE_POINT: "point",
-    SHAPE_POLYLINE: "polyline",
-    SHAPE_POLYGON: "polygon",
-}
-
 
 # ---------------------------------------------------------------------------
 # parsers (bytes → python records); run on executors

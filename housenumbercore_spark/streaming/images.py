@@ -3,14 +3,16 @@
 Continuous version of the batch image pipeline: new parquet files of
 image+caption rows land in a directory; a file-source stream picks each
 file up EXACTLY ONCE (Structured Streaming's file-source log via the
-checkpoint location), runs the per-row invariant gate (recomputed phash
-must match the stored phash — a real decode through images/codec, Arrow-
-batched) and lands accepted rows in the gated table while quarantining
-violations. Restart-safe INCLUDING mid-batch crashes: each micro-batch
-overwrites its own batch_id=N output directory, so a batch replayed after
-a crash between the sink write and the streaming commit lands in the same
-place instead of appending duplicates, and re-running with new input
-files processes only the unseen files (both tested). This is the
+checkpoint location), runs the per-row invariant gate (the stored-image
+self-check of images/udfs: a real decode through images/codec whose
+recomputed phash and dims must match the stored ones, Arrow-batched) and
+commits every micro-batch — accepted and quarantined rows, flagged by
+``gate_ok`` — as one atomic append to a snapshot table
+(sources/snapshots.py). Restart-safe INCLUDING mid-batch crashes: a crash
+before the commit leaves only an invisible orphan data dir, a replayed
+batch whose commit already landed is skipped by its recorded batch id,
+re-running with new input files processes only the unseen files, and a
+run with a different checkpoint is refused (all tested). This is the
 streaming counterpart of checkpoint.py's per-partition batch resume.
 
 Scale shape: the gate is a map-only transform on the stream (no state, no
@@ -27,21 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..images import codec
+from ..images.udfs import _self_check
 from ..sources.images import SCHEMA as IMAGE_SCHEMA
 
 
 def _gated_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     ok = np.zeros(len(pdf), dtype=bool)
-    for i in range(len(pdf)):
-        try:
-            px = codec.decode_image(bytes(pdf["bytes"].iat[i]))
-            ok[i] = (
-                codec.phash64(px) == int(pdf["phash"].iat[i])
-                and px.shape[1] == int(pdf["w"].iat[i])
-                and px.shape[0] == int(pdf["h"].iat[i])
-            )
-        except Exception:
-            ok[i] = False
+    rows = zip(pdf["bytes"], pdf["phash"], pdf["w"], pdf["h"])
+    for i, (buf, ph, w, h) in enumerate(rows):
+        dw, dh, _, phash_ok = _self_check(buf, ph)
+        ok[i] = phash_ok and dw == w and dh == h
     out = pdf.copy()
     out["gate_ok"] = ok
     return out
@@ -91,146 +88,66 @@ def image_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     return stream.mapInPandas(gen, _GATED_SCHEMA)
 
 
-#: schema of the gate's on-disk output sides: image columns + the
-#: batch_id partition column the idempotent sink writes.
-GATED_OUT_SCHEMA = T.StructType(
-    IMAGE_SCHEMA.fields + [T.StructField("batch_id", T.IntegerType(), True)]
-)
-
-
-def read_gated(spark: SparkSession, out_dir: str, side: str) -> DataFrame:
-    """Schema-stable read of ``out_dir/{side}`` (side = accepted|rejected).
-
-    The explicit schema makes the read safe when the side holds only an
-    empty batch directory left by a crashed attempt whose replay produced
-    zero rows — schema INFERENCE would raise UNABLE_TO_INFER_SCHEMA there.
-    A side that was never written at all reads as an empty DataFrame.
-    Existence is checked through the Hadoop FileSystem API — a driver-local
-    os.path.exists is always False on hdfs://*/s3a:// paths and would
-    silently report every total as zero."""
-    from ..sources.sinks import _hadoop_fs
-
-    p = f"{out_dir}/{side}"
-    _, fs, jpath = _hadoop_fs(spark, p)
-    if not fs.exists(jpath):
-        return spark.createDataFrame([], GATED_OUT_SCHEMA)
-    return spark.read.schema(GATED_OUT_SCHEMA).parquet(p)
+_OP = "stream_batch_"  # commit operation: stream_batch_<id> checkpoint=<dir>
+_CKPT = " checkpoint="
 
 
 def run_image_gate(
     spark: SparkSession,
     src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> dict:
-    """Drain everything currently in ``src_dir`` (availableNow trigger),
-    landing gated rows under ``out_dir/accepted`` and violations under
-    ``out_dir/rejected``. Exactly-once END TO END: the checkpoint's file
-    log picks each input file up once, and the sink is idempotent per
-    micro-batch — every batch OVERWRITES its own ``batch_id=N``
-    subdirectory, so a crash after the write but before the streaming
-    commit replays the batch into the same directory instead of
-    duplicating rows (a plain append sink would double them). Readers see
-    the batch id as a partition column. Returns counts.
-
-    ``out_dir`` and ``checkpoint_dir`` are ONE unit: a fresh checkpoint
-    restarts batch ids at 0, so reusing a previous run's out_dir with a
-    NEW checkpoint would overwrite/delete its same-numbered batch dirs
-    while higher-numbered stale dirs still count into the returned totals
-    — a meaningless blend of two lineages, with some old data destroyed.
-    The out_dir is therefore stamped with its checkpoint's path
-    (``_GATE_LINEAGE``, invisible to parquet readers): crash replays reuse
-    the same checkpoint and pass; a different checkpoint against a stamped
-    out_dir is refused up front."""
-    from ..sources.sinks import _hadoop_fs
-    from ..sources.snapshots import _read_text, _write_text_atomic
-
-    jvm, fs, _ = _hadoop_fs(spark, out_dir)
-    marker = f"{out_dir}/_GATE_LINEAGE"
-    stamped = _read_text(fs, jvm, jvm.org.apache.hadoop.fs.Path(marker))
-    if stamped is not None and stamped != checkpoint_dir:
-        raise ValueError(
-            f"run_image_gate: {out_dir} was written by the gate run "
-            f"checkpointed at {stamped!r}, but this run checkpoints at "
-            f"{checkpoint_dir!r} — batch ids would restart and corrupt the "
-            "old lineage; clear the out_dir together with the checkpoint"
-        )
-    if stamped is None:
-        _write_text_atomic(spark, marker, checkpoint_dir)
-
-    gated = image_stream(spark, src_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            acc = batch_df.filter(F.col("gate_ok")).drop("gate_ok")
-            rej = batch_df.filter(~F.col("gate_ok")).drop("gate_ok")
-            for part, dest in ((acc, "accepted"), (rej, "rejected")):
-                pdir = f"{out_dir}/{dest}/batch_id={batch_id}"
-                if part.limit(1).count():
-                    part.write.mode("overwrite").parquet(pdir)
-                else:
-                    # clear a possible partial dir from a crashed attempt —
-                    # an empty replay must not leave stale rows behind.
-                    # Deletion goes through the Hadoop FileSystem API so it
-                    # works on whatever filesystem the write side targets
-                    # (a driver-local shutil.rmtree would silently no-op on
-                    # hdfs:/s3a: and resurrect the partial rows).
-                    _, fs, jpath = _hadoop_fs(spark, pdir)
-                    fs.delete(jpath, True)
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        gated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return {
-        "accepted_total": read_gated(spark, out_dir, "accepted").count(),
-        "rejected_total": read_gated(spark, out_dir, "rejected").count(),
-    }
-
-
-def run_image_gate_snapshot(
-    spark: SparkSession,
-    src_dir: str,
     out_table: str,
     checkpoint_dir: str,
 ) -> dict:
-    """:func:`run_image_gate` with the SNAPSHOT-table sink
-    (sources/snapshots.py): each micro-batch commits atomically as one
-    append whose manifest operation records the batch id — so downstream
-    readers never observe a torn batch (the per-directory sink exposes a
-    batch's files the moment they land; here nothing is visible until the
-    pointer flip), and replays are idempotent at the COMMIT level: a
-    batch id already in the table's history is skipped outright, and a
-    crash between data write and pointer flip leaves only an orphaned
-    (invisible) data dir that :func:`snapshots.vacuum` reclaims.
+    """Drain everything currently in ``src_dir`` (availableNow trigger)
+    into the snapshot table ``out_table`` (sources/snapshots.py). Exactly-
+    once END TO END: the checkpoint's file log picks each input file up
+    once, and each micro-batch commits atomically as one append whose
+    manifest operation records its batch id and checkpoint — so readers
+    never observe a torn batch (nothing is visible until the pointer
+    flip), a batch id already in the table's history is skipped on
+    replay, and a crash between data write and pointer flip leaves only
+    an orphaned (invisible) data dir that :func:`snapshots.vacuum`
+    reclaims. Returns the table's accepted/rejected totals.
 
     Accepted and rejected rows land in ONE table with the ``gate_ok``
     flag and ``batch_id`` column (filter on read); every version is
-    time-travelable, giving the stream a complete audit trail."""
-    from ..sources import snapshots as SN
+    time-travelable, giving the stream a complete audit trail.
 
-    gated = image_stream(spark, src_dir)
+    ``out_table`` and ``checkpoint_dir`` are ONE unit: a fresh checkpoint
+    restarts batch ids at 0, so its batch 0 — possibly holding files the
+    old lineage never saw — would be skipped as already committed while
+    the new checkpoint marks those files processed, losing them for good.
+    A run whose checkpoint differs from the one the table's last stream
+    commit recorded is therefore refused before the stream starts (manifest
+    reads only, no Spark job); crash replays reuse the same checkpoint and
+    pass."""
+    from ..sources import snapshots as SN
 
     # each manifest is immutable, so it needs reading ONCE per sink
     # lifetime: cache the committed-batch ids and only read manifests
     # newer than the last version seen (without this, batch N re-reads
     # all N-1 manifests and stream metadata I/O grows O(V^2))
-    _seen = {"upto": 0, "ids": set()}
+    _seen = {"upto": 0, "ids": set(), "ckpt": None}
 
     def committed_batches() -> set[int]:
-        cur = SN.current_version(spark, out_table)
-        for v in range((_seen["upto"] or 0) + 1, (cur or 0) + 1):
+        cur = SN.current_version(spark, out_table) or 0
+        for v in range(_seen["upto"] + 1, cur + 1):
             op = SN.load_snapshot(spark, out_table, v)["operation"]
-            if op.startswith("stream_batch_"):
-                _seen["ids"].add(int(op.rsplit("_", 1)[1]))
-        _seen["upto"] = max(_seen["upto"], cur or 0)
+            if op.startswith(_OP):
+                bid, _, ckpt = op[len(_OP):].partition(_CKPT)
+                _seen["ids"].add(int(bid))
+                _seen["ckpt"] = ckpt
+        _seen["upto"] = max(_seen["upto"], cur)
         return _seen["ids"]
+
+    committed_batches()
+    if _seen["ckpt"] not in (None, checkpoint_dir):
+        raise ValueError(
+            f"run_image_gate: {out_table} was written by the gate run "
+            f"checkpointed at {_seen['ckpt']!r}, but this run checkpoints at "
+            f"{checkpoint_dir!r} — batch ids would restart and corrupt the "
+            "old lineage; clear the table together with the checkpoint"
+        )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if int(batch_id) in committed_batches():
@@ -238,11 +155,12 @@ def run_image_gate_snapshot(
         SN.snapshot_write(
             batch_df.withColumn("batch_id", F.lit(int(batch_id))),
             out_table,
-            operation=f"stream_batch_{int(batch_id)}",
+            operation=f"{_OP}{int(batch_id)}{_CKPT}{checkpoint_dir}",
         )
 
     q = (
-        gated.writeStream.foreachBatch(sink)
+        image_stream(spark, src_dir)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
