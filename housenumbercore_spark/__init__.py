@@ -15,12 +15,16 @@ PostGIS JDBC, see /root/reference) as set-based Spark DataFrame operators:
 
 The package is organised as:
 
-- ``geo``       cell grid, WKB geometry kernel, CRS transforms, distance
-- ``norm``      housenumber / street-name normalization (column expressions)
-- ``operators`` spatial joins, match evaluation, dedup, similarity, text stats
-- ``sources``   deterministic synthetic data generation, CSV list reader
-- ``images``    pure-python codecs (PNG/zlib, deterministic lossy), phash, PSNR
-- ``plans``     per-partition checkpoint / lineage manifests, resume logic
+- ``geo``        cell grid, WKB geometry kernel, CRS transforms, distance
+- ``norm``       housenumber / street-name normalization (column expressions)
+- ``operators``  spatial joins, kNN, match evaluation, merge, banded pair joins
+- ``sources``    synthetic data, list/OSM importers, export sinks, snapshot tables
+- ``images``     pure-python codecs (PNG/zlib, deterministic lossy) behind a
+  ``register_codec`` seam, phash, PSNR
+- ``text`` / ``vectors``  dedup, corpus preparation, similarity search
+- ``streaming``  windowed / stateful streams, the streaming image gate
+- ``checkpoint`` per-partition checkpoint / lineage manifests, resume logic
+- ``pipelines``  the query bodies behind ``__spark_entry__.queries()``
 """
 
 __version__ = "0.1.0"

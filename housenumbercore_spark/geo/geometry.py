@@ -23,10 +23,9 @@ Geometry model
 Predicate semantics (matched to the PostGIS calls the reference makes):
 - ``covers``  — boundary-inclusive point-in-polygon (ST_Covers).
 - ``contains_point`` — boundary-exclusive (ST_Contains for points).
-- line vs polygon ``contains_or_crosses`` — any vertex or edge sample inside,
-  or any segment intersecting the boundary (ST_Contains OR ST_Crosses of
-  MunicipalityJobs.java:292 — the union of the two predicates is simply
-  "the line intersects the closed polygon area", which is what we compute).
+- line vs polygon (ST_Contains OR ST_Crosses of MunicipalityJobs.java:292)
+  is the JVM expression ``pip_join.seg_crossing_expr``; its numpy oracle is
+  tests/geo_oracle.py.
 """
 
 from __future__ import annotations
@@ -265,83 +264,6 @@ def contains_point(poly: Polygon | MultiPolygon, px: np.ndarray, py: np.ndarray)
         on_b = _points_on_ring(px, py, p.rings[0])
         out |= inside & ~on_b
     return out
-
-
-def _segments_intersect(
-    a0: np.ndarray, a1: np.ndarray, b0: np.ndarray, b1: np.ndarray
-) -> np.ndarray:
-    """Pairwise: does segment set A (n,2,2) intersect segment set B (m,2,2)?
-
-    Returns (n, m) bool. Standard orientation test incl. collinear overlap.
-    """
-    def cross(o, p, q):
-        return (p[..., 0] - o[..., 0]) * (q[..., 1] - o[..., 1]) - (
-            p[..., 1] - o[..., 1]
-        ) * (q[..., 0] - o[..., 0])
-
-    A0 = a0[:, None, :]
-    A1 = a1[:, None, :]
-    B0 = b0[None, :, :]
-    B1 = b1[None, :, :]
-    d1 = cross(A0, A1, B0)
-    d2 = cross(A0, A1, B1)
-    d3 = cross(B0, B1, A0)
-    d4 = cross(B0, B1, A1)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-
-    def on_seg(p0, p1, q):
-        return (
-            (np.minimum(p0[..., 0], p1[..., 0]) <= q[..., 0])
-            & (q[..., 0] <= np.maximum(p0[..., 0], p1[..., 0]))
-            & (np.minimum(p0[..., 1], p1[..., 1]) <= q[..., 1])
-            & (q[..., 1] <= np.maximum(p0[..., 1], p1[..., 1]))
-        )
-
-    touch = (
-        ((d1 == 0) & on_seg(A0, A1, B0))
-        | ((d2 == 0) & on_seg(A0, A1, B1))
-        | ((d3 == 0) & on_seg(B0, B1, A0))
-        | ((d4 == 0) & on_seg(B0, B1, A1))
-    )
-    return proper | touch
-
-
-def line_intersects_polygon(poly: Polygon | MultiPolygon, line: np.ndarray) -> bool:
-    """ST_Contains(poly, line) OR ST_Crosses(poly, line) — the union predicate
-    of MunicipalityJobs.java:292: the line shares interior area with the
-    polygon, i.e. a vertex is covered or an edge crosses the boundary.
-    """
-    line = np.asarray(line, dtype=np.float64).reshape(-1, 2)
-    if covers(poly, line[:, 0], line[:, 1]).any():
-        return True
-    a0 = line[:-1]
-    a1 = line[1:]
-    for p in to_polygons(poly):
-        for ring in p.rings:
-            if _segments_intersect(a0, a1, ring[:-1], ring[1:]).any():
-                return True
-    return False
-
-
-def line_within_polygon(poly: Polygon | MultiPolygon, line: np.ndarray) -> bool:
-    """All vertices covered and no boundary crossing (approximation of
-    ST_Within adequate for convex-ish admin cells; used by J3 suburb checks).
-    """
-    line = np.asarray(line, dtype=np.float64).reshape(-1, 2)
-    if not covers(poly, line[:, 0], line[:, 1]).all():
-        return False
-    a0 = line[:-1]
-    a1 = line[1:]
-    for p in to_polygons(poly):
-        for ring in p.rings:
-            hit = _segments_intersect(a0, a1, ring[:-1], ring[1:])
-            if hit.any():
-                # touching at shared vertices is fine for Covers-style within;
-                # reject only proper crossings by re-testing midpoints
-                mids = (a0 + a1) / 2.0
-                if not covers(poly, mids[:, 0], mids[:, 1]).all():
-                    return False
-    return True
 
 
 # ---------------------------------------------------------------------------

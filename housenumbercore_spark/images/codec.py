@@ -31,8 +31,8 @@ import numpy as np
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
-# same decompression-bomb budget as jpeg.MAX_DECODE_PIXELS: a hostile
-# header must raise a typed per-row failure before any unbounded allocation
+# decompression-bomb budget (32 Mpx): a hostile header must raise a typed
+# per-row failure before any unbounded allocation
 MAX_DECODE_PIXELS = 1 << 25
 
 
@@ -403,7 +403,3 @@ def phash64(pixels: np.ndarray) -> int:
     if val >= 1 << 63:
         val -= 1 << 64
     return int(val)
-
-
-def hamming64(a: int, b: int) -> int:
-    return int(bin((a ^ b) & ((1 << 64) - 1)).count("1"))

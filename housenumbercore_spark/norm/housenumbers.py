@@ -41,14 +41,6 @@ def housenumber_sortable_sql(expr: str) -> str:
     return f"(repeat('0', GREATEST(0, {SORTABLE_LEN} - {nd})) || {expr})"
 
 
-def sortable_py(hnr: str) -> str:
-    """Python twin of :func:`housenumber_sortable` (tests, driver-side)."""
-    import re
-
-    ndigits = len(re.match(r"^[0-9]*", hnr).group(0))
-    return "0" * max(0, SORTABLE_LEN - ndigits) + hnr
-
-
 def split_multi(hnr: Column | str) -> Column:
     """"1,3;5" → array('1','3','5') (trimmed). Explode at the call site."""
     hnr = F.col(hnr) if isinstance(hnr, str) else hnr

@@ -4,9 +4,10 @@ The reference's Workcache loads the previous result set, flips per-row
 states (dbloaded → unchanged/changed/new, leftovers → deleted) and writes
 back row-by-row (/root/reference/src/de/regioosm/theoreticalhousenumbercore/
 util/Workcache.java:114-132, 209-240, 243-424). Here the same protocol is
-ONE full-outer join producing an action column, from which both the new
-snapshot and the audit counters derive — at scale this is a single shuffle
-on the merge key (or an Iceberg MERGE INTO where a catalog exists).
+ONE full-outer join producing an action column: the new snapshot is every
+row but the deletes, and the audit counters group by action. At scale this
+is a single shuffle on the merge key (or an Iceberg MERGE INTO where a
+catalog exists).
 """
 
 from __future__ import annotations
@@ -71,11 +72,6 @@ def merge_actions(
         for c in compare
     ]
     return j.select(*key_cols, *out_vals, action.alias("action"))
-
-
-def apply_merge(actions_df: DataFrame, keys: list[str], compare: list[str]) -> DataFrame:
-    """New snapshot: everything except deletes (values already merged)."""
-    return actions_df.filter(F.col("action") != "delete").select(*keys, *compare)
 
 
 def merge_counters(actions_df: DataFrame) -> DataFrame:

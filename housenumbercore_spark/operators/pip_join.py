@@ -324,11 +324,11 @@ def seg_crossing_expr(
 ) -> F.Column:
     """Inclusive segment-vs-boundary intersection as a pure codegen
     expression: true iff segment (x0,y0)-(x1,y1) properly crosses OR touches
-    any edge in the cell's ``edges`` payload. Exactly mirrors the vectorized
-    kernel geo.geometry._segments_intersect (orientation signs + collinear
-    bbox touch), so the JVM street refine matches the python path bit for
-    bit. Replaces the reference's per-municipality ST_Contains/ST_Crosses
-    round-trips (MunicipalityJobs.java:282-304) on the candidate set."""
+    any edge in the cell's ``edges`` payload. Exactly mirrors the numpy
+    oracle tests/geo_oracle.py (orientation signs + collinear bbox touch),
+    so the JVM street refine matches it bit for bit. Replaces the
+    reference's per-municipality ST_Contains/ST_Crosses round-trips
+    (MunicipalityJobs.java:282-304) on the candidate set."""
     # orientation tests; S0/S1 = segment endpoints, E0/E1 = edge endpoints
     d1 = f"((({x1})-({x0}))*(e[1]-({y0})) - (({y1})-({y0}))*(e[0]-({x0})))"
     d2 = f"((({x1})-({x0}))*(e[3]-({y0})) - (({y1})-({y0}))*(e[2]-({x0})))"

@@ -70,33 +70,6 @@ def write_spatial(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    n_buckets: int = 32,
-    sort: bool = True,
-    path: str | None = None,
-) -> None:
-    """Persist ``df`` hash-bucketed (and bucket-sorted) on ``keys``.
-
-    Two tables bucketed the same way join WITHOUT a shuffle on either side
-    — the join that recurs every evaluation cycle (official list vs OSM
-    objects on the match key, reference Workcache.java's cache-by-key) pays
-    its partitioning once at write time instead of per query. On a real
-    cluster this is the parquet/Hive-bucketing analogue of Iceberg's
-    bucket-partition transform; bucket count should track cluster
-    parallelism (10³-10⁴ at the 1000-executor shape), not row count."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *keys
-    )
-    if sort:
-        writer = writer.sortBy(*keys)
-    if path is not None:  # external table (explicit location)
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
 def read_window(
     spark: SparkSession,
     path: str,

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from .osm_xml import SCHEMA as ELEMENT_SCHEMA
 from .osm_xml import parse_osm_bytes
 
-DEFAULT_ENDPOINT = "https://overpass-api.de/api/interpreter"
 # the reference's budget constants (MunicipalityJobs.java:405)
 TIMEOUT_S = 3600
 MAXSIZE_BYTES = 1073741824
@@ -166,11 +165,3 @@ def http_get(
             failed += 1
             if failed > max_tries:
                 raise
-
-
-def fetch_overpass(
-    query: str, endpoint: str = DEFAULT_ENDPOINT, timeout_s: int = 300
-) -> bytes:
-    """POST an Overpass QL query (the reference GETs an URL-encoded query
-    string, MunicipalityJobs.java:418-422; POST avoids the encoding dance)."""
-    return http_get(endpoint, timeout_s=timeout_s, data=query)

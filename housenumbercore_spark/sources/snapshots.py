@@ -722,31 +722,6 @@ def compact(spark: SparkSession, table: str) -> int:
     )
 
 
-def snapshot_history(spark: SparkSession, table: str) -> DataFrame:
-    """(version, parent, operation, n_entries, n_rows) per snapshot —
-    Iceberg's ``table.history()``/``snapshots`` metadata view."""
-    cur = current_version(spark, table)
-    rows = []
-    for v in range(1, (cur or 0) + 1):
-        s = load_snapshot(spark, table, v)
-        known = [e["rows"] for e in s["entries"]]
-        rows.append(
-            (
-                s["version"],
-                s["parent"],
-                s["operation"],
-                len(s["entries"]),
-                sum(r for r in known if r is not None) if all(
-                    r is not None for r in known
-                ) else None,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version int, parent int, operation string, n_entries int, n_rows long",
-    )
-
-
 def rollback(spark: SparkSession, table: str, version: int) -> int:
     """Metadata-only commit re-pointing the table at ``version``'s file
     set (Iceberg ``rollback_to_snapshot``); history is preserved.

@@ -10,7 +10,7 @@ from housenumbercore_spark.operators.banded import (
     bit_bands,
     explode_bands,
 )
-from housenumbercore_spark.plans.audit import simple_plan
+from plan_audit import simple_plan
 
 
 def test_banded_pairs_pair_predicates_and_refine_before_dedup(spark):

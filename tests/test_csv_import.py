@@ -187,3 +187,18 @@ def test_backtick_in_header_name(spark, tmp_path):
     rows = CI.read_csv_addresses(spark, str(p)).collect()
     assert rows[0].street == "A"
     assert rows[0].extraosmtags == {"price`EUR": "9"}
+
+
+def test_write_tsv_roundtrip(spark, tmp_path):
+    """S12: the TSV sink reads back row for row with a tab separator and a
+    header; a NULL stays NULL and a comma needs no quoting."""
+    from housenumbercore_spark.sources.export import write_tsv
+
+    rows = [(1, "Hauptstraße", "12a"), (2, None, "3"), (3, "Am Markt, Nord", "7,9")]
+    df = spark.createDataFrame(rows, "id long, street string, housenumber string")
+    path = str(tmp_path / "out_tsv")
+    write_tsv(df, path)
+    back = spark.read.csv(path, sep="\t", header=True)
+    assert back.columns == ["id", "street", "housenumber"]
+    got = sorted(tuple(r) for r in back.collect())
+    assert got == [(str(i), s, h) for i, s, h in rows]

@@ -4,9 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from housenumbercore_spark.plans import audit_plan
 from housenumbercore_spark.sources import layout as L
 from housenumbercore_spark.sources import synthetic as S
+from plan_audit import audit_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,37 +50,6 @@ def test_window_read_prunes_partitions_and_pushes_filters(spark, tmp_path):
         S.HOT_LON0, S.HOT_LAT0, S.HOT_LON0 + S.HOT_SPAN, S.HOT_LAT0 + S.HOT_SPAN, 8
     )
     assert len(cover) < len(dirs)
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key must join with zero Exchange
-    nodes — the write-once/join-many layout for the recurring match join."""
-    from housenumbercore_spark.sources import layout as L
-
-    spark.sql("DROP TABLE IF EXISTS t_official")
-    spark.sql("DROP TABLE IF EXISTS t_osm")
-    a = spark.range(0, 20000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("va")
-    )
-    b = spark.range(0, 20000, 2).select(
-        F.col("id").alias("k"), (F.col("id") % 5).alias("vb")
-    )
-    L.write_bucketed(a, "t_official", ["k"], n_buckets=8,
-                     path=str(tmp_path / "t_official"))
-    L.write_bucketed(b, "t_osm", ["k"], n_buckets=8,
-                     path=str(tmp_path / "t_osm"))
-    # disable broadcast so only bucketing can avoid the shuffle
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("t_official").join(spark.table("t_osm"), "k")
-        assert j.count() == 10000
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_official")
-        spark.sql("DROP TABLE IF EXISTS t_osm")
 
 
 def test_window_read_matches_plain_filter(spark, tmp_path):

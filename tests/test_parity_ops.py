@@ -110,6 +110,14 @@ def test_hnr_explode_semantics(spark):
     ]
 
 
+def _apply_merge(actions_df):
+    """The snapshot a diff leads to: every row except deletes (the values
+    are already merged into the action frame)."""
+    from pyspark.sql import functions as F
+
+    return actions_df.filter(F.col("action") != "delete").select("k", "v")
+
+
 def test_merge_null_key_converges(spark):
     """A NULL merge key must match NULL-SAFELY (like the upsert sinks):
     plain equality would emit a perpetual delete+insert pair and the diff
@@ -125,7 +133,7 @@ def test_merge_null_key_converges(spark):
         for r in M.merge_actions(base, updates, ["k"], ["v"]).collect()
     }
     assert acts == {(None, "A"): "unchanged", (1, "B2"): "update"}
-    snap = M.apply_merge(M.merge_actions(base, updates, ["k"], ["v"]), ["k"], ["v"])
+    snap = _apply_merge(M.merge_actions(base, updates, ["k"], ["v"]))
     again = M.merge_actions(snap, updates, ["k"], ["v"])
     assert {r.action for r in again.collect()} == {"unchanged"}
 
@@ -144,7 +152,7 @@ def test_merge_null_update_wins(spark):
     assert out[1] == (None, "update")
     assert out[2] == ("Y", "unchanged")
     # re-running against the merged snapshot converges to all-unchanged
-    snap = M.apply_merge(M.merge_actions(base, updates, ["k"], ["v"]), ["k"], ["v"])
+    snap = _apply_merge(M.merge_actions(base, updates, ["k"], ["v"]))
     again = {r.k: r.action for r in
              M.merge_actions(snap, updates, ["k"], ["v"]).collect()}
     assert set(again.values()) == {"unchanged"}

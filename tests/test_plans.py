@@ -7,7 +7,7 @@ fact path, scans pruned, shuffles bounded.
 
 from __future__ import annotations
 
-from housenumbercore_spark.plans import audit_plan
+from plan_audit import audit_plan
 
 SF = "/root/testdata/sf0.001"
 

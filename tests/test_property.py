@@ -150,8 +150,17 @@ def test_utm_inverse_consistency(lon, lat):
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=9999), min_size=2, max_size=2))
 def test_housenumber_sortable_orders_numerically(nums):
-    from housenumbercore_spark.norm.housenumbers import sortable_py
+    """The sort key's SQL twin (the one the DuckDB oracles use) orders
+    plain housenumbers numerically; test_norm pins the twin to the Spark
+    expression."""
+    import duckdb
+
+    from housenumbercore_spark.norm.housenumbers import housenumber_sortable_sql
 
     a, b = nums
-    sa, sb = sortable_py(str(a)), sortable_py(str(b))
+    sa, sb = duckdb.execute(
+        f"select {housenumber_sortable_sql('x')}, {housenumber_sortable_sql('y')}"
+        " from (select ?::varchar as x, ?::varchar as y)",
+        [str(a), str(b)],
+    ).fetchone()
     assert (a < b) == (sa < sb) or a == b

@@ -14,6 +14,7 @@ import pytest
 from housenumbercore_spark.geo import geometry as G
 from housenumbercore_spark.operators import pip_join as PJ
 from housenumbercore_spark.operators import street_catalog as SC
+from geo_oracle import line_intersects_polygon
 
 def _multi_wkb():
     return G.multipolygon_wkb([
@@ -141,7 +142,7 @@ def test_segment_refine_vertex_collinear_endpoints(spark, shape):
     want = {
         i
         for i in range(m)
-        if G.line_intersects_polygon(
+        if line_intersects_polygon(
             poly, np.array([[x0[i], y0[i]], [x1[i], y1[i]]])
         )
     }
@@ -182,7 +183,7 @@ def test_segment_refine_matches_python_kernel(spark, shape):
     want = {
         i
         for i in range(n)
-        if G.line_intersects_polygon(
+        if line_intersects_polygon(
             poly, np.array([[x0[i], y0[i]], [x1[i], y1[i]]])
         )
     }

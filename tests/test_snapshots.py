@@ -111,8 +111,8 @@ class TestHistoryRollbackVacuum:
         v3 = SN.rollback(spark, table, 1)
         assert v3 == 3
         assert SN.read_snapshot(spark, table).count() == 20
-        ops = {r.version: r.operation
-               for r in SN.snapshot_history(spark, table).collect()}
+        ops = {v: SN.load_snapshot(spark, table, v)["operation"]
+               for v in range(1, SN.current_version(spark, table) + 1)}
         assert ops == {
             1: "append", 2: "overwrite", 3: "rollback_to_v1"
         }

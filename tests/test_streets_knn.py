@@ -139,8 +139,9 @@ def test_knn_auto_strategy_picks_a_valid_path(spark):
 
 def test_streets_in_areas_touch_and_collinear_degeneracies(spark):
     """Inclusive intersect semantics on exact touch cases, validated per
-    segment against the python kernel (line_intersects_polygon)."""
+    segment against the python oracle (line_intersects_polygon)."""
     import numpy as np
+    from geo_oracle import line_intersects_polygon
 
     from housenumbercore_spark.geo import geometry as G
     from housenumbercore_spark.operators import street_catalog as SC
@@ -176,7 +177,7 @@ def test_streets_in_areas_touch_and_collinear_degeneracies(spark):
     want = {
         oid
         for oid, x0, y0, x1, y1 in segs
-        if G.line_intersects_polygon(poly, np.array([[x0, y0], [x1, y1]]))
+        if line_intersects_polygon(poly, np.array([[x0, y0], [x1, y1]]))
     }
     assert got == want
     assert {1, 2, 3, 5, 7, 8} <= got and 4 not in got and 6 not in got
