@@ -23,7 +23,8 @@ The package is organised as:
   ``register_codec`` seam, phash, PSNR
 - ``text`` / ``vectors``  dedup, corpus preparation, similarity search
 - ``streaming``  windowed / stateful streams, the streaming image gate
-- ``checkpoint`` per-partition checkpoint / lineage manifests, resume logic
+- ``checkpoint`` per-partition checkpoints as snapshot-table commits whose
+  entries carry the lineage (fingerprint, count, digests); manifest-only resume
 - ``pipelines``  the query bodies behind ``__spark_entry__.queries()``
 """
 

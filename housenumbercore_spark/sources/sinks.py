@@ -2,7 +2,7 @@
 
 ``_hadoop_fs`` resolves a path to its Hadoop FileSystem (checkpoints,
 CSV import, streaming sinks and snapshot tables all commit through it);
-``_decode_part_dir`` and ``_fs_find_partition_dir`` locate a Hive-style
+``_decode_partition_dir`` and ``_fs_find_partition_dir`` locate a Hive-style
 ``col=value`` partition directory by its DECODED values. The Workcache
 write-back itself (Workcache.java:243-424) is one snapshot commit:
 sources/snapshots.merge_upsert_snapshot_table.
@@ -16,7 +16,7 @@ from pyspark.sql import SparkSession
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _decode_part_dir(name: str) -> tuple[str, str | None]:
+def _decode_partition_dir(name: str) -> tuple[str, str | None]:
     """On-disk ``col=escaped-value`` directory name → (col, decoded value).
     Spark percent-escapes special characters (space, ':', '/', …) and writes
     NULL as __HIVE_DEFAULT_PARTITION__ — matching must happen on DECODED
@@ -62,7 +62,7 @@ def _fs_find_partition_dir(fs, base, values: tuple) -> list[str] | None:
                 name = st.getPath().getName()
                 if "=" not in name or name.startswith(("_", ".")):
                     continue
-                if _decode_part_dir(name)[1] == want:
+                if _decode_partition_dir(name)[1] == want:
                     nxt = st.getPath()
                     rel.append(name)
                     break

@@ -8,29 +8,37 @@ pinned view, and the Workcache write-back its one commit
 (:func:`merge_upsert_snapshot_table`), with the (public) Iceberg metadata
 pattern over plain parquet — no Iceberg runtime is required:
 
-- every write lands in a fresh immutable directory under ``data/``;
+- every write lands in a fresh immutable directory under ``data/``, in
+  ONE pass: an Observation in the write's result stage gathers the new
+  entry's row count, partition tuples and per-entry stats (row-hash
+  xor/sum digests, cell range, pixel digests — as Iceberg keeps per-file
+  stats), so nothing is read back. Partitioned writes use the REBALANCE
+  distribution: rows cluster by partition value, but AQE may split a
+  skewed partition over several tasks and files;
 - a snapshot is a JSON manifest (``_meta/v<N>.json``) listing the data
-  directories (with their partition values and row counts) that make up
-  the table at version N;
-- the current version is a one-line pointer file (``_meta/VERSION``)
-  committed by ATOMIC RENAME — the single linearization point.
+  directories (with their partition values, row counts, stats and the
+  operation that wrote them) that make up the table at version N; its
+  EXCLUSIVE create is the commit's linearization point;
+- ``_meta/VERSION`` is a one-line pointer cache flipped after it.
 
-Readers resolve the pointer once at plan time and scan only the listed
+Readers resolve the version once at plan time and scan only the listed
 directories, so a concurrent commit NEVER changes a running query
 (snapshot isolation); old versions stay readable (`time travel`) until
 :func:`vacuum` reclaims them; :func:`rollback` is a metadata-only commit
 that re-points to a previous file set.
 
 Scale notes (100 TB): the manifest is driver-side JSON listing O(write)
-directory entries, not per-file entries — fine to ~10⁵ commits; real
-Iceberg moves exactly this structure into avro manifest *files* plus a
-manifest *list* per snapshot, which is the drop-in upgrade (same calls,
+directory entries, not per-file entries, and every version re-serializes
+all of its parent's entries — n commits write O(n²) manifest bytes (the
+curve is measured in BENCH/BASELINE.md). Real Iceberg moves exactly this
+structure into avro manifest *files* plus a manifest *list* per
+snapshot, which is the drop-in upgrade (same calls,
 ``writeTo(...).createOrReplace()``) on a cluster with the Iceberg runtime.
 Partition values are tracked per data directory, so
 ``overwrite_partitions`` and partition-pruned reads are metadata
-operations — no data listing, no shuffle. Commits are optimistic
-single-writer: a concurrent commit surfaces as CommitConflict (the
-pointer moved), never as corruption.
+operations — no data listing. Commits are optimistic: a writer whose
+frame was planned against a pinned version surfaces a concurrent commit
+as CommitConflict; a blind writer rebases and retries. Never corruption.
 
 Reference parity: Workcache.java:243-424 (diff protocol transaction),
 MunicipalityJobs.java "evaluation stays visible during recompute";
@@ -40,11 +48,15 @@ SURVEY §1.3/S8-S10.
 from __future__ import annotations
 
 import json
+import random
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..text.hashing import h60_spark
 from .sinks import _fs_find_partition_dir, _hadoop_fs
 
 META = "_meta"
@@ -223,32 +235,66 @@ def load_snapshot(spark: SparkSession, table: str, version: int) -> dict:
     return json.loads(txt)
 
 
-def _partition_values(
-    df: DataFrame, partition_cols: list[str]
-) -> tuple[list[list], list[list]]:
-    """Distinct partition tuples of ``df`` → (raw JSON-primitive values,
-    JVM-rendered strings). The strings come from CAST(col AS STRING) so
-    they match Spark's own partition-directory naming (Python ``str()``
-    renders doubles differently — 1e-07 vs 1.0E-7); the raw values feed
-    typed DataFrame filters."""
-    from pyspark.sql import functions as F
+# Per-entry stats: ONE definition shared by the observed write
+# (snapshot_write) and every recomputation from data on disk
+# (checkpoint.verify_checkpoints) — they must agree bit for bit. The row
+# hash is 60 bits of md5 over the canonical JSON of the row's
+# non-partition columns in frame order; it feeds two order-independent
+# streams, bit_xor and the sum of its 30-bit-masked value. XOR alone
+# cancels on even multiplicities ({X,X} and {Y,Y} both digest to 0); the
+# sum breaks that symmetry, and the mask keeps it exact below 2^33 rows.
+_SUM_MASK = (1 << 30) - 1
+_CELL_COLS = ("cell", "tile_id", "__cell")
+_STATS = (
+    "value_digest", "value_sum", "cell_min", "cell_max",
+    "pixel_digest", "pixel_sum",
+)
+_RD = "__rd"
 
-    if not partition_cols:
-        return [], []
-    rows = (
-        df.select(
-            *partition_cols,
-            *[
-                F.col(c).cast("string").alias(f"__s_{c}")
-                for c in partition_cols
-            ],
-        )
-        .dropDuplicates(partition_cols)
-        .collect()
-    )
-    raw, rendered = [], []
+
+def row_stats(
+    df: DataFrame, partition_cols: list[str]
+) -> tuple[DataFrame, list]:
+    """``df`` plus the row-hash column ``__rd``, and the aggregates over it:
+    ``rows``, the two value-digest streams, ``cell_min``/``cell_max`` (first
+    integral column of :data:`_CELL_COLS`) and the pixel-digest pair (an
+    integral ``phash``). One md5 per row, map-side combinable."""
+    data = [f for f in df.schema.fields if f.name not in partition_cols]
+    cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in data)
+    out = df.withColumn(_RD, F.expr(h60_spark(f"to_json(struct({cols}))")))
+    aggs = [
+        F.count(F.lit(1)).alias("rows"),
+        F.expr(f"bit_xor({_RD})").alias("value_digest"),
+        F.expr(f"sum({_RD} & {_SUM_MASK})").alias("value_sum"),
+    ]
+    ints = {f.name for f in data if isinstance(f.dataType, T.IntegralType)}
+    cell = next((c for c in _CELL_COLS if c in ints), None)
+    if cell:
+        aggs += [F.min(cell).alias("cell_min"), F.max(cell).alias("cell_max")]
+    if "phash" in ints:
+        aggs += [
+            F.expr("bit_xor(phash)").alias("pixel_digest"),
+            F.expr(f"sum(phash & {_SUM_MASK})").alias("pixel_sum"),
+        ]
+    return out, aggs
+
+
+def entry_stats(metrics: dict) -> dict:
+    """An entry's ``stats`` from the aggregates of :func:`row_stats`."""
+    return {
+        k: None if metrics.get(k) is None else int(metrics[k]) for k in _STATS
+    }
+
+
+def _partition_values(rows, n: int) -> tuple[list[list], list[list]]:
+    """Rows of (``n`` raw partition values, their ``n`` CAST AS STRING
+    renderings) → distinct (raw JSON-primitive values, rendered strings).
+    The strings match Spark's own partition-directory naming (Python
+    ``str()`` renders doubles differently — 1e-07 vs 1.0E-7); the raw
+    values feed typed DataFrame filters."""
+    dedup: dict[tuple, list] = {}
     for r in rows:
-        vals = [r[c] for c in partition_cols]
+        vals = list(r[:n])
         for v in vals:
             if v is not None and not isinstance(v, (str, int, float, bool)):
                 raise ValueError(
@@ -259,22 +305,84 @@ def _partition_values(
         # leaf and reads both back as NULL — canonicalize '' to NULL so
         # manifest identity matches storage identity (else a write into
         # the '' value would not replace the NULL partition's entry)
-        raw.append([None if v == "" else v for v in vals])
-        rendered.append(
-            [
-                None if s == "" else s
-                for s in (r[f"__s_{c}"] for c in partition_cols)
-            ]
+        key = tuple(None if s == "" else s for s in r[n:])
+        dedup[key] = [None if v == "" else v for v in vals]
+    return list(dedup.values()), [list(k) for k in dedup]
+
+
+def _render_partitions(spark: SparkSession, tuples, fields) -> list:
+    """(raw, CAST AS STRING) rows for raw partition ``tuples`` typed as
+    ``fields``, cast by the JVM over an inline VALUES table — a local
+    relation, so no Spark job runs."""
+    cols = [f"col{i + 1}" for i in range(len(fields))]
+    row = "(" + ", ".join(
+        f"CAST(? AS {f.dataType.simpleString()})" for f in fields
+    ) + ")"
+    return spark.sql(
+        f"SELECT {', '.join(cols)}, "
+        + ", ".join(f"CAST({c} AS STRING)" for c in cols)
+        + f" FROM VALUES {', '.join([row] * len(tuples))}",
+        args=[v for t in tuples for v in t],
+    ).collect()
+
+
+def _parent_entries(
+    spark: SparkSession, table: str, parent: int | None, partition_cols
+) -> list[dict]:
+    if parent is None:
+        return []
+    snap = load_snapshot(spark, table, parent)
+    if snap["partition_cols"] != partition_cols:
+        raise ValueError(
+            f"partition_cols {partition_cols} != table's "
+            f"{snap['partition_cols']}"
         )
-    dedup: dict[tuple, list] = {}
-    for rv, sv in zip(raw, rendered):
-        dedup[tuple(sv)] = rv
-    rendered = [list(k) for k in dedup]
-    raw = list(dedup.values())
-    return raw, rendered
+    return snap["entries"]
+
+
+def _next_entries(
+    mode: str, parent_entries: list[dict], entry: dict | None, touched: set
+) -> list[dict]:
+    new = [entry] if entry else []
+    if mode == "append":
+        return parent_entries + new
+    if mode == "overwrite":
+        return new
+    entries = []
+    for e in parent_entries:
+        keep = [
+            i for i, p in enumerate(e["partitions_str"]) if tuple(p) not in touched
+        ]
+        if len(keep) == len(e["partitions"]):
+            entries.append(e)
+        elif keep:
+            # entry straddles touched + untouched partitions: narrow it to
+            # the kept partitions — reads then scan only the kept leaf dirs
+            # (rows=None marks the narrowed state; its stats no longer hold)
+            entries.append(
+                {
+                    **e,
+                    "partitions": [e["partitions"][i] for i in keep],
+                    "partitions_str": [e["partitions_str"][i] for i in keep],
+                    "rows": None,
+                    "stats": None,
+                }
+            )
+    return entries + new
+
+
+def _commit(spark: SparkSession, table: str, manifest: dict) -> int:
+    # linearization point: creating v{N}.json is EXCLUSIVE, so of two
+    # writers that both read parent N-1, exactly one owns version N; the
+    # loser raises CommitConflict without touching the winner's manifest
+    v = manifest["version"]
+    _write_text_new(spark, f"{table}/{META}/v{v}.json", json.dumps(manifest))
+    _write_text_atomic(spark, f"{table}/{META}/VERSION", str(v))
+    return v
 
 
 _UNSET = object()
+_COMMIT_ATTEMPTS = 8
 
 
 def snapshot_write(
@@ -299,9 +407,11 @@ def snapshot_write(
         that deletes every row of a partition has no row carrying its
         value, yet the old rows must disappear).
 
-    The data write is one Spark job into a fresh immutable directory; the
-    commit is one atomic pointer rename. Readers pinned to any earlier
-    version are unaffected (their directories are never rewritten).
+    The data write is the only Spark work: one evaluation of ``df`` into a
+    fresh immutable directory, whose row count, partition tuples and
+    :func:`row_stats` land in the new manifest entry (with ``operation``)
+    — nothing is read back. The commit is one exclusive manifest create.
+    Readers pinned to any earlier version are unaffected.
 
     ``expected_parent`` is the optimistic-concurrency handle (Iceberg's
     expected-snapshot-id): a caller that PLANNED ``df`` against a pinned
@@ -310,135 +420,100 @@ def snapshot_write(
     a commit landing anywhere in between owns that manifest name first and
     this write raises :class:`CommitConflict` instead of silently
     rebuilding the intervening commit's partitions from stale rows. Left
-    unset, the parent is resolved here, which only guards the narrower
-    resolve→commit window (fine for writers whose ``df`` does not read
-    the table itself)."""
+    unset, ``df`` must not read the table: the parent is resolved after
+    the data write, and a commit that lands first is rebased onto and
+    retried (Iceberg's retry rule — appends and overwrites of a blind
+    frame commute), up to a bounded number of attempts."""
     spark = df.sparkSession
     partition_cols = list(partition_cols or [])
+    n = len(partition_cols)
+    if mode not in ("append", "overwrite", "overwrite_partitions"):
+        raise ValueError(f"unknown mode {mode}")
+    if mode == "overwrite_partitions" and not partition_cols:
+        raise ValueError("overwrite_partitions needs partition_cols")
     parent = (
         current_version(spark, table)
         if expected_parent is _UNSET
         else expected_parent
     )
-    parent_entries: list[dict] = []
-    if parent is not None:
-        snap = load_snapshot(spark, table, parent)
-        if snap["partition_cols"] != partition_cols:
-            raise ValueError(
-                f"partition_cols {partition_cols} != table's "
-                f"{snap['partition_cols']}"
-            )
-        parent_entries = snap["entries"]
+    parent_entries = _parent_entries(spark, table, parent, partition_cols)
 
     write_id = uuid.uuid4().hex
     data_dir = f"{table}/{DATA}/{write_id}"
-    # ONE evaluation of the input plan (the write itself): row count and
-    # partition values are then derived from the WRITTEN files — parquet
-    # footer counts + partition-directory values — instead of re-executing
-    # a possibly expensive plan (a merge join) two more times. The explicit
-    # schema pins partition-column types on read-back (inference would
-    # turn a string partition value '00123' into int 123).
-    writer = df.write.mode("error")
+    # ONE evaluation of the input plan: an Observation in the write's
+    # result stage gathers the entry's count, partition tuples and stats
+    # as the rows stream into the files (a failed task attempt's partial
+    # aggregates are discarded). REBALANCE (Iceberg's hash distribution)
+    # clusters rows by partition value yet lets AQE split a skewed
+    # partition across tasks and coalesce small ones. The manifest schema
+    # pins partition-column types on read (inference would turn a string
+    # partition value '00123' into int 123).
+    observed, aggs = row_stats(
+        df.hint("rebalance", *partition_cols) if partition_cols else df,
+        partition_cols,
+    )
     if partition_cols:
-        writer = (
-            df.repartition(*partition_cols)
-            .write.mode("error")
-            .partitionBy(*partition_cols)
+        rendered = [
+            F.col(c).cast("string").alias(f"__s{i}")
+            for i, c in enumerate(partition_cols)
+        ]
+        aggs.append(
+            F.collect_set(F.struct(*partition_cols, *rendered)).alias("parts")
         )
+    obs = Observation()
+    writer = observed.observe(obs, *aggs).drop(_RD).write.mode("error")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
     writer.parquet(data_dir)
-    jvm_fs = _hadoop_fs(spark, data_dir)
-    # deterministic zero-row detection (a broad except here would turn a
-    # genuinely failed read-back into a silent empty commit): a zero-row
-    # partitioned write leaves no part files, only _SUCCESS
-    jvm, fs, jdir = jvm_fs
-    it = fs.listFiles(jdir, True)
-    has_parts = False
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            has_parts = True
-            break
-    n_rows = 0
-    if has_parts:
-        written = spark.read.schema(df.schema).parquet(data_dir)
-        n_rows = written.count()
+    metrics = obs.get
     entry = None
-    new_parts: list[list] = []
     new_parts_str: list[list] = []
-    if n_rows > 0:
-        new_parts, new_parts_str = _partition_values(written, partition_cols)
+    if metrics["rows"]:
+        new_parts, new_parts_str = _partition_values(
+            metrics.get("parts", []), n
+        )
         entry = {
             "dir": f"{DATA}/{write_id}",
-            "rows": n_rows,
+            "rows": int(metrics["rows"]),
             "partitions": new_parts,
             "partitions_str": new_parts_str,
+            "operation": operation or mode,
+            "stats": entry_stats(metrics),
         }
     else:
         # a zero-row commit carries no data dir (an empty partitioned
         # parquet dir has no readable schema) — the manifest alone carries
         # the change (e.g. a merge that only deletes); drop the empty dir
+        _, fs, jdir = _hadoop_fs(spark, data_dir)
         fs.delete(jdir, True)
-    if mode == "append":
-        entries = parent_entries + ([entry] if entry else [])
-    elif mode == "overwrite":
-        entries = [entry] if entry else []
-    elif mode == "overwrite_partitions":
-        if not partition_cols:
-            raise ValueError("overwrite_partitions needs partition_cols")
-        touched = {tuple(p) for p in new_parts_str}
-        if replaced_partitions:
-            # render the extra raw tuples exactly as Spark renders its own
-            # partition values (CAST AS STRING through the JVM)
-            extra = spark.createDataFrame(
-                [tuple(p) for p in replaced_partitions],
-                df.select(*partition_cols).schema,
-            )
-            _, extra_str = _partition_values(extra, partition_cols)
-            touched |= {tuple(p) for p in extra_str}
-        entries = []
-        for e in parent_entries:
-            keep = [
-                i
-                for i, p in enumerate(e["partitions_str"])
-                if tuple(p) not in touched
-            ]
-            if len(keep) == len(e["partitions"]):
-                entries.append(e)
-            elif keep:
-                # entry straddles touched + untouched partitions: narrow it
-                # to the kept partitions — reads then scan only the kept
-                # leaf dirs (rows=None marks the narrowed state)
-                entries.append(
-                    {
-                        **e,
-                        "partitions": [e["partitions"][i] for i in keep],
-                        "partitions_str": [
-                            e["partitions_str"][i] for i in keep
-                        ],
-                        "rows": None,
-                    }
-                )
-        if entry:
-            entries.append(entry)
-    else:
-        raise ValueError(f"unknown mode {mode}")
+    touched = {tuple(p) for p in new_parts_str}
+    if mode == "overwrite_partitions" and replaced_partitions:
+        fields = df.select(*partition_cols).schema.fields
+        rows = _render_partitions(spark, replaced_partitions, fields)
+        touched |= {tuple(p) for p in _partition_values(rows, n)[1]}
 
-    version = (parent or 0) + 1
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "operation": operation or mode,
-        "partition_cols": partition_cols,
-        "entries": entries,
-        "schema": df.schema.jsonValue(),
-    }
-    # linearization point: creating v{N}.json is EXCLUSIVE, so of two
-    # writers that both read parent N-1, exactly one owns version N; the
-    # loser raises CommitConflict without touching the winner's manifest
-    _write_text_new(
-        spark, f"{table}/{META}/v{version}.json", json.dumps(manifest)
-    )
-    _write_text_atomic(spark, f"{table}/{META}/VERSION", str(version))
-    return version
+    for attempt in range(1, _COMMIT_ATTEMPTS + 1):
+        if expected_parent is _UNSET:
+            latest = current_version(spark, table)
+            if latest != parent:
+                parent = latest
+                parent_entries = _parent_entries(
+                    spark, table, parent, partition_cols
+                )
+        manifest = {
+            "version": (parent or 0) + 1,
+            "parent": parent,
+            "operation": operation or mode,
+            "partition_cols": partition_cols,
+            "entries": _next_entries(mode, parent_entries, entry, touched),
+            "schema": df.schema.jsonValue(),
+        }
+        try:
+            return _commit(spark, table, manifest)
+        except CommitConflict:
+            if expected_parent is not _UNSET or attempt == _COMMIT_ATTEMPTS:
+                raise
+            time.sleep(random.uniform(0, 0.01 * 2**attempt))
 
 
 def read_snapshot(
@@ -459,8 +534,6 @@ def read_snapshot(
     as residual ``eqNullSafe`` row filters only (an unknown column name
     fails loudly at Spark analysis)."""
     from functools import reduce
-
-    from pyspark.sql import functions as F
 
     v = version if version is not None else current_version(spark, table)
     if v is None:
@@ -522,8 +595,8 @@ def read_snapshot(
             for p in e["partitions_str"]:
                 rel = _fs_find_partition_dir(fs, jbase, tuple(p))
                 if rel is None:
-                    # manifest partitions come from _partition_values over
-                    # actually-written rows (narrowing only subsets them),
+                    # manifest partitions are observed on the written rows
+                    # (narrowing only subsets them),
                     # so every listed tuple HAS a leaf dir — an absent one
                     # means external deletion/corruption; skipping it
                     # would silently return incomplete data
@@ -615,8 +688,6 @@ def merge_upsert_snapshot_table(
     partition whose rows are all deleted is passed explicitly as replaced
     so its old entry is still dropped."""
     import functools
-
-    from pyspark.sql import functions as F
 
     # resolve the version ONCE and plan everything against it — resolving
     # separately for load_snapshot and read_snapshot let a commit landing
@@ -742,20 +813,18 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
             f"cannot rollback {table} to v{version}: data dirs vacuumed "
             f"({', '.join(missing)})"
         )
-    new_version = (cur or 0) + 1
-    manifest = {
-        "version": new_version,
-        "parent": cur,
-        "operation": f"rollback_to_v{version}",
-        "partition_cols": snap["partition_cols"],
-        "entries": snap["entries"],
-        "schema": snap["schema"],
-    }
-    _write_text_new(
-        spark, f"{table}/{META}/v{new_version}.json", json.dumps(manifest)
+    return _commit(
+        spark,
+        table,
+        {
+            "version": (cur or 0) + 1,
+            "parent": cur,
+            "operation": f"rollback_to_v{version}",
+            "partition_cols": snap["partition_cols"],
+            "entries": snap["entries"],
+            "schema": snap["schema"],
+        },
     )
-    _write_text_atomic(spark, f"{table}/{META}/VERSION", str(new_version))
-    return new_version
 
 
 def vacuum(
@@ -775,8 +844,6 @@ def vacuum(
     ``orphan_grace_s`` (Iceberg's remove_orphan_files applies the same
     age-based rule, default 3 days). Pass 0 to force-reclaim when no
     writer can be active."""
-    import time
-
     cur = current_version(spark, table)
     if cur is None:
         return []

@@ -445,6 +445,60 @@ class TestCommitRace:
             assert any(p.startswith("racer-") for p in winner_rows)
 
 
+class TestObservedWrite:
+    def test_write_reads_nothing_back(self, spark, tmp_path):
+        """The entry's count, partition tuples and stats come from the
+        write itself: a 4-partition frame commits in at most 2 jobs (the
+        rebalance map stage + the write), and the recorded stats equal a
+        recomputation from the files."""
+        df = spark.range(0, 8000, numPartitions=4).select(
+            F.col("id").cast("int").alias("id"),
+            (F.col("id") % 4).cast("int").alias("bucket"),
+            F.concat(F.lit("p-"), F.col("id").cast("string")).alias("payload"),
+        )
+        t = str(tmp_path / "tbl")
+        sc = spark.sparkContext._jsc.sc()
+        j0 = sc.dagScheduler().nextJobId()
+        SN.snapshot_write(df, t, ["bucket"], operation="load")
+        assert sc.dagScheduler().nextJobId() - j0 <= 2
+        (e,) = SN.load_snapshot(spark, t, 1)["entries"]
+        assert e["rows"] == 8000 and e["operation"] == "load"
+        assert sorted(e["partitions"]) == [[0], [1], [2], [3]]
+        assert sorted(e["partitions_str"]) == [["0"], ["1"], ["2"], ["3"]]
+        d, aggs = SN.row_stats(SN.read_snapshot(spark, t), ["bucket"])
+        assert e["stats"] == SN.entry_stats(d.agg(*aggs).collect()[0].asDict())
+
+    def test_blind_commit_rebases_onto_a_racing_commit(
+        self, spark, table, monkeypatch
+    ):
+        """A writer that leaves expected_parent unset does not read the
+        table, so a commit that lands between its data write and its
+        manifest create is rebased onto and retried, not refused: both
+        overwrites of disjoint partitions survive, on versions 2 and 3."""
+        real = SN._write_text_new
+        raced = []
+
+        def create_after_a_racer(spark_, path, text):
+            if not raced:
+                raced.append(path)  # the racer's own create goes through
+                SN.snapshot_write(
+                    _df(spark, [(200, 1, "racer")]), table, ["bucket"],
+                    mode="overwrite_partitions",
+                )
+            real(spark_, path, text)
+
+        monkeypatch.setattr(SN, "_write_text_new", create_after_a_racer)
+        v = SN.snapshot_write(
+            _df(spark, [(100, 0, "blind")]), table, ["bucket"],
+            mode="overwrite_partitions",
+        )
+        assert raced and v == 3
+        got = {(r.id, r.bucket) for r in SN.read_snapshot(spark, table).collect()}
+        assert got == {(i, i % 4) for i in range(20) if i % 4 > 1} | {
+            (100, 0), (200, 1)
+        }
+
+
 class TestExpectedParent:
     def test_stale_pin_conflicts_instead_of_reverting(self, spark, table):
         """r5 review: per-caller version pinning closed the load/read
