@@ -260,13 +260,26 @@ def cell_iy_col(cell: Column | str) -> Column:
     return cell % F.lit(1 << _IX_SHIFT)
 
 
-def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
-    """ANSI-SQL string computing the identical cell id (DuckDB oracle)."""
+def ix_sql(lon_expr: str, res: int) -> str:
+    """ANSI-SQL twin of :func:`ix_col` (DuckDB and Spark SQL alike)."""
     n = 1 << res
-    ix = (
-        f"LEAST(GREATEST(CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}.0) AS BIGINT), 0), {n - 1})"
-    )
-    iy = (
-        f"LEAST(GREATEST(CAST(FLOOR(({lat_expr} + 90.0) / 180.0 * {n}.0) AS BIGINT), 0), {n - 1})"
-    )
-    return f"(CAST({res} AS BIGINT) * {1 << _RES_SHIFT} + {ix} * {1 << _IX_SHIFT} + {iy})"
+    return f"LEAST(GREATEST(CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}.0) AS BIGINT), 0), {n - 1})"
+
+
+def iy_sql(lat_expr: str, res: int) -> str:
+    """ANSI-SQL twin of :func:`iy_col`."""
+    n = 1 << res
+    return f"LEAST(GREATEST(CAST(FLOOR(({lat_expr} + 90.0) / 180.0 * {n}.0) AS BIGINT), 0), {n - 1})"
+
+
+def pack_sql(res: int, ix_expr: str, iy_expr: str) -> str:
+    """ANSI-SQL twin of :func:`pack_col`."""
+    return f"(CAST({res} AS BIGINT) * {1 << _RES_SHIFT} + ({ix_expr}) * {1 << _IX_SHIFT} + ({iy_expr}))"
+
+
+def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
+    """ANSI-SQL string computing the identical cell id (DuckDB oracle). Spark
+    evaluates it bit-identically to :func:`cell_col`, so Spark code that
+    builds many cell expressions may parse this one string (``F.expr``)
+    instead of composing ~25 Column calls through the Python gateway."""
+    return pack_sql(res, ix_sql(lon_expr, res), iy_sql(lat_expr, res))

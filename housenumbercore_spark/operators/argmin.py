@@ -45,8 +45,7 @@ _RN = "__argmin_rn"
 def has_unorderable_col(schema) -> bool:
     """True if any column type cannot participate in struct ordering
     (MapType anywhere in the type tree) — such schemas must take the
-    row_number window path in :func:`keep_min_row` and the window rank
-    path in ``operators.knn.knn_nearest``."""
+    row_number window path in :func:`keep_min_row`."""
     from pyspark.sql import types as T
 
     def bad(dt) -> bool:

@@ -10,35 +10,36 @@ north rule adds geometric nearest-street matching. Design:
 2. points encode their cell with pure column arithmetic and equi-join;
 3. per-candidate distance is the reference's equirectangular formula
    (dbfunctions.sql:28-50) as a codegen column expression;
-4. rank 1 per point by (distance, target_id) — deterministic ties.
+4. the n nearest per point, ordered by (distance, target_id) —
+   deterministic ties.
 
-Exactness contract: the ring-k result equals the global nearest neighbour
-whenever the true nearest target lies within the k-ring of the point's cell
-(guaranteed when the target set is dense relative to the cell size, or when
-``res`` is coarse enough that the ring covers the domain). Points whose ring
-has no candidate fall out; :func:`knn_nearest` can escalate them through
-coarser resolutions with ``fallback_res``.
+Exactness contract: :func:`knn_nearest_multires` returns the global n
+nearest targets of every point, provided the LAST resolution's ring covers
+the target domain; every earlier round only accepts points whose answer
+:func:`ring_guarantee_m` proves. :func:`knn_nearest` is the one-round
+ladder: its ring-k answer is the global one whenever the true neighbours
+lie within the k-ring of the point's cell, and points whose ring holds no
+candidate fall out.
+
+Materialization contract: the points shuffle once, hash-partitioned by
+``point_id``, and every round is a narrow step over that partitioning (a
+LEFT join against the broadcast ring dim, then a per-point aggregate that
+needs no exchange). A point proven in an earlier round gets a NULL join key,
+so it passes through with one row and probes nothing. Building the ladder
+runs no Spark job: no count, no pin, no anti-join, no union.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from ..geo import cells as C
 from ..geo.distance import EARTH_RADIUS_M, distance_m_col
-from ..pinning import pin
 
 
-# schema-orderability is shared infrastructure with keep_min_row; the
-# canonical definition lives in operators/argmin.py
-from .argmin import has_unorderable_col as _has_unorderable_col
-
-
-def _ring_offsets_df(spark, k: int):
-    offs = [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
-    return spark.createDataFrame(offs, "dx long, dy long")
+def _q(name: str) -> str:
+    return f"`{name}`"
 
 
 def expand_targets_to_ring(
@@ -48,25 +49,28 @@ def expand_targets_to_ring(
     ring: lon wraps; lat offsets running past a pole are FILTERED rather than
     clamped — the same covered-cell set as geo.cells.k_ring's clamp+dedup,
     but duplicate-free by construction, so the ring dim needs no
-    dropDuplicates shuffle before broadcasting)."""
-    spark = targets.sparkSession
+    dropDuplicates shuffle before broadcasting). The (2k+1)² offsets are one
+    literal generator, so the expansion is a narrow projection of
+    ``targets``: no offsets relation, no nested-loop join."""
     n = 1 << res
-    t = targets.withColumn("__c", C.cell_col(lon, lat, res))
-    # integer unpack/repack through the grid's single definition
-    ix = C.cell_ix_col("__c")
-    iy = C.cell_iy_col("__c")
-    offs = F.broadcast(_ring_offsets_df(spark, k))
-    expanded = (
-        t.crossJoin(offs)
-        .filter((iy + F.col("dy") >= 0) & (iy + F.col("dy") <= n - 1))
-        .select(
-            "*",
-            C.pack_col(
-                res, F.pmod(ix + F.col("dx"), F.lit(n)), iy + F.col("dy")
-            ).alias("cell"),
-        )
+    offs = ", ".join(
+        f"named_struct('dx', CAST({dx} AS BIGINT), 'dy', CAST({dy} AS BIGINT))"
+        for dx in range(-k, k + 1) for dy in range(-k, k + 1)
     )
-    out = expanded.drop("__c", "dx", "dy")
+    iy = "__iy + __o.dy"
+    # the grid's SQL definitions (cells.ix_sql/iy_sql/pack_sql) parse into
+    # one expression each, instead of ~25 gateway calls per Column build
+    out = (
+        targets.selectExpr(
+            "*",
+            f"{C.ix_sql(_q(lon), res)} AS __ix",
+            f"{C.iy_sql(_q(lat), res)} AS __iy",
+            f"explode(array({offs})) AS __o",
+        )
+        .where(f"{iy} BETWEEN 0 AND {n - 1}")
+        .selectExpr("*", f"{C.pack_sql(res, f'pmod(__ix + __o.dx, {n})', iy)} AS cell")
+        .drop("__ix", "__iy", "__o")
+    )
     if n <= 2 * k + 1:  # lon wrap can alias cells only at degenerate res
         out = out.dropDuplicates(out.columns)
     return out
@@ -107,13 +111,14 @@ def knn_nearest(
     dim_strategy: str = "broadcast",
     n_salt: int = 8,
 ) -> DataFrame:
-    """→ points columns + (target_id, target payload, dist_m, knn_rank).
+    """→ points columns + targets columns + (dist_m, knn_rank): the
+    ``n_neighbors`` nearest targets within the k-ring of each point's cell.
 
     Points with no target in their k-ring are absent from the output
-    (caller may re-run them at a coarser ``res`` and union —
-    :func:`knn_nearest_multires` automates exactly that).
-
-    ``dim_strategy`` picks the candidate-join physical shape:
+    (:func:`knn_nearest_multires` escalates such points, and every point
+    whose ring answer is not provably global, to coarser resolutions).
+    This is the one-round ladder, so both share one plan shape and one
+    ``dim_strategy``:
 
     - ``'broadcast'`` (default): ring-expanded targets broadcast to every
       executor — right whenever (2k+1)²×|targets| fits in memory.
@@ -125,54 +130,29 @@ def knn_nearest(
     - ``'auto'``: choose by Catalyst's size estimate of the expanded dim
       (unknown stats → shuffle, the safe direction at scale).
     """
-    dim = expand_targets_to_ring(targets, res, k_ring, lon=tlon, lat=tlat)
-    pts = points.withColumn("__cell", C.cell_col(lon, lat, res))
-    if dim_strategy == "auto":
-        dim_strategy = _dim_strategy_auto(dim)
-    if dim_strategy == "broadcast":
-        # internal name for the dim join column — dropping 'cell' by name
-        # would also clobber a points payload column called 'cell'
-        dimr = dim.withColumnRenamed("cell", "__dim_cell")
-        cand = pts.join(
-            F.broadcast(dimr), pts["__cell"] == dimr["__dim_cell"]
-        ).drop("__dim_cell", "__cell")
-    elif dim_strategy == "shuffle":
-        from .pip_join import salted_cell_join
+    return knn_nearest_multires(
+        points, targets, [res], k_ring, n_neighbors,
+        point_id=point_id, target_id=target_id, lon=lon, lat=lat,
+        tlon=tlon, tlat=tlat, dim_strategy=dim_strategy, n_salt=n_salt,
+    )
 
-        cand = salted_cell_join(pts, dim, n_salt=n_salt).drop("__cell")
-    else:
-        raise ValueError(f"unknown dim_strategy {dim_strategy!r}")
-    cand = cand.withColumn(
-        "dist_m", distance_m_col(F.col(lon), F.col(lat), F.col(tlon), F.col(tlat))
-    )
-    if n_neighbors == 1 and not _has_unorderable_col(cand.schema):
-        # argmin as a hash aggregate: min(struct(dist, id, payload...)) is
-        # map-side combinable, so the per-point candidate fan-in (ring ×
-        # target density) collapses BEFORE the shuffle — |points| narrow
-        # rows shuffle instead of every candidate, and no sort at all.
-        # Deterministic: (dist_m, target_id) leads the struct and target_id
-        # is unique, so later fields never decide the min. The window path
-        # below shuffles + sorts all candidates — only needed for k > 1.
-        others = [c for c in cand.columns if c != point_id]
-        best = cand.groupBy(point_id).agg(
-            F.min(F.struct("dist_m", target_id, *[c for c in others
-                                                  if c not in ("dist_m", target_id)])
-                  ).alias("__best")
-        )
-        return best.select(
-            point_id,
-            *[F.col(f"__best.{c}").alias(c) for c in others],
-            F.lit(1).alias("knn_rank"),
-        )
-    # k > 1, or a target payload column with an unorderable type (e.g. a
-    # MapType tag column): rank through a window, which only ORDERS BY
-    # (dist_m, target_id) and therefore accepts any payload type that the
-    # argmin struct aggregate would reject with an AnalysisException.
-    w = W.partitionBy(point_id).orderBy(F.col("dist_m").asc(), F.col(target_id).asc())
-    out = cand.withColumn("knn_rank", F.row_number().over(w)).filter(
-        F.col("knn_rank") <= n_neighbors
-    )
-    return out
+
+def _ring_guarantee_sql(res: int, k: int, lon: str, lat: str) -> str:
+    n = 1 << res
+    cw, ch = 360.0 / n, 180.0 / n
+    lo, la = _q(lon), _q(lat)
+    # grid indices come from THE single definition (cells.ix_sql/iy_sql, the
+    # same ones the ring join's cell keys parse) so this bound can never
+    # drift from the join's actual cell assignment; D-suffixed literals keep
+    # the arithmetic in doubles
+    ix, iy = C.ix_sql(lo, res), C.iy_sql(la, res)
+    g_lon = (f"LEAST({lo} - (({ix} - {k}) * {cw!r}D - 180.0D), "
+             f"(({ix} + {1 + k}) * {cw!r}D - 180.0D) - {lo})")
+    g_lat = (f"LEAST({la} - (({iy} - {k}) * {ch!r}D - 90.0D), "
+             f"(({iy} + {1 + k}) * {ch!r}D - 90.0D) - {la})")
+    cos_m = f"COS(RADIANS(ABS({la}) + ({g_lat}) / 2))"
+    return (f"(LEAST(RADIANS({g_lat}), RADIANS({g_lon}) * {cos_m}) "
+            f"* {EARTH_RADIUS_M * 0.9999!r}D)")
 
 
 def ring_guarantee_m(
@@ -192,21 +172,7 @@ def ring_guarantee_m(
 
     A 0.9999 factor absorbs float rounding. If the best in-ring candidate is
     STRICTLY closer than this bound, it is provably the global nearest."""
-    n = 1 << res
-    cw, ch = 360.0 / n, 180.0 / n
-    lo, la = F.col(lon), F.col(lat)
-    # grid indices come from THE single definition (cells.ix_col/iy_col) so
-    # this bound can never drift from the join's actual cell assignment;
-    # bit-identical to the former inline floor((lo+180)/cw) because n is a
-    # power of two (scaling by 2^r commutes with IEEE rounding)
-    ix, iy = C.ix_col(lo, res), C.iy_col(la, res)
-    g_lon = F.least(lo - ((ix - k) * cw - 180.0), ((ix + 1 + k) * cw - 180.0) - lo)
-    g_lat = F.least(la - ((iy - k) * ch - 90.0), ((iy + 1 + k) * ch - 90.0) - la)
-    cos_m = F.cos(F.radians(F.abs(la) + g_lat / 2))
-    return (
-        F.least(F.radians(g_lat), F.radians(g_lon) * cos_m)
-        * F.lit(EARTH_RADIUS_M * 0.9999)
-    )
+    return F.expr(_ring_guarantee_sql(res, k, lon, lat))
 
 
 def knn_nearest_multires(
@@ -229,94 +195,107 @@ def knn_nearest_multires(
     in-ring candidate beats :func:`ring_guarantee_m`; escalate only the
     remainder to coarser resolutions. The LAST res in ``res_list`` is the
     unconditional fallback and must ring-cover the whole target domain.
+    → points columns + targets columns + (dist_m, knn_rank); a target row
+    is identified by (target_id, tlon, tlat).
 
     Scale shape: at a res where the ring holds O(10) targets, candidates are
     ~(2k+1)²·density·|points| instead of |points|·|targets| — the difference
     between a 10⁶-candidate round and a 10¹⁴-row cross join at the 10¹²
     target shape.
 
-    Materialization contract: one materializing job per non-final round —
-    the round's ranked+flag rows are pinned LAZILY with lineage truncated
-    (pinning.py, truncate=True: retained lineage would stack one
-    ring-join plan per round), and the round's sure-count is always the
-    first action on the pinned frame, so that single count job executes
-    the ring join AND stores the blocks at once (an eager pin would run a
-    separate materialization job per round just to count right after —
-    measured ~10% of the sf0.1 ladder). The accepted subset and the next
-    round's anti-join then read the stored blocks, which are freed by
-    RDD GC when the returned plan drops its references. No explicit cache pinning (round 1's cache+anti-join
-    structure pinned |points|×k rows per round for the whole job). After
-    each checkpoint a narrow count over the stored flag blocks decides
-    ROUND COLLAPSE: when the ring bound already proved every point's
-    neighbor, the remaining coarser rounds are skipped entirely — each
-    would otherwise re-scan the points for the anti-join and run a full
-    (empty) ring join. The count is a cheap driver barrier on blocks the
-    eager checkpoint materialized anyway; it does not re-execute lineage.
-    On a multi-executor cluster where executor loss must not restart the
-    job, run with the ``reliable`` pin strategy (pinning.py) so each
-    round checkpoints to durable storage."""
+    Plan shape — one lazy chain, no driver action while building it:
+
+    - the points shuffle ONCE, into ``defaultParallelism`` partitions
+      hash-partitioned by ``point_id``;
+    - round 1 LEFT-joins every point to the ring dim on its cell; a later
+      round joins on ``CASE WHEN NOT __done THEN cell END``, so a point
+      proven earlier has a NULL key, probes nothing and passes through
+      with one null-extended row (a round in which every point is already
+      done costs one narrow pass and no probe);
+    - ``groupBy(point_id)`` keeps the point's columns (``first``: constant
+      per point) and, for points not yet done, the round's sorted top-n
+      array of (dist_m, target_id, tlon, tlat). The state is already
+      partitioned by ``point_id``, so this aggregate adds no exchange.
+      ``collect_list`` plans it as an ObjectHashAggregate, which past
+      ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` (128)
+      points per task falls back to sorting that task's candidate rows
+      (every task does, on perfbench evaluate);
+    - ``__done`` becomes true once the array holds n candidates and the
+      n-th beats the ring bound; the last round's answer is final for
+      every point still open;
+    - at the end ``inline`` over the array yields one row per neighbour
+      with its ``knn_rank``, and the remaining target columns join back
+      once on (target_id, tlon, tlat), so a payload of any type (MapType
+      tags included) never enters the sort.
+
+    Under ``dim_strategy='broadcast'`` the point shuffle is the only
+    non-broadcast exchange; under ``'shuffle'`` each round's salted join
+    shuffles the state and the aggregate shuffles it back by ``point_id``.
+    Each round has exactly one consumer, so nothing is recomputed and no
+    round needs a pin; a failed task re-runs its share of the chain from
+    the point shuffle's files."""
+    if n_neighbors < 1:
+        raise ValueError(f"n_neighbors must be >= 1, got {n_neighbors}")
     cores = points.sparkSession.sparkContext.defaultParallelism
-    remaining = points.repartition(cores)  # decouple from input file count
-    # Round collapse needs the live point count: a point whose ring holds
-    # NO candidate emits zero rows from knn_nearest, so "no unsure rows"
-    # alone does not prove every point was answered. The count executes
-    # the repartition's shuffle map stage once; the ring-join jobs reuse
-    # those shuffle files (same RDD lineage), so this is one narrow pass,
-    # not a second scan. A single-res ladder never collapses (the only
-    # round is the unconditional fallback), so it skips the count job.
-    n_remaining = remaining.count() if len(res_list) > 1 else 0
-    out: DataFrame | None = None
-    for i, res in enumerate(res_list):
-        last = i == len(res_list) - 1
-        ranked = knn_nearest(
-            remaining, targets, res, k_ring, n_neighbors,
-            point_id=point_id, target_id=target_id,
-            lon=lon, lat=lat, tlon=tlon, tlat=tlat,
-            dim_strategy=dim_strategy, n_salt=n_salt,
+    ring_cols = [target_id, tlon, tlat]
+    narrow = targets.select(*ring_cols)
+    if dim_strategy == "auto":
+        # every round's dim is |ring| × |targets| rows: the first decides
+        dim_strategy = _dim_strategy_auto(
+            expand_targets_to_ring(narrow, res_list[0], k_ring, tlon, tlat)
         )
-        if not last:
-            g = ring_guarantee_m(res, k_ring, lon, lat)
-            if n_neighbors == 1:
-                # one row per point already (argmin aggregate): the bound
-                # check is a plain projection, no window
-                flags = pin(
-                    ranked.withColumn("__sure", F.col("dist_m") < g),
-                    eager=False,
-                    truncate=True,
-                )
-                drop_cols = ["__sure"]
-            else:
-                wcnt = W.partitionBy(point_id)
-                flags = pin(
-                    ranked.withColumn("__worst", F.max("dist_m").over(wcnt))
-                    .withColumn("__cnt", F.count(F.lit(1)).over(wcnt))
-                    .withColumn(
-                        "__sure",
-                        (F.col("__cnt") == n_neighbors) & (F.col("__worst") < g),
-                    ),
-                    eager=False,
-                    truncate=True,
-                )
-                drop_cols = ["__worst", "__cnt", "__sure"]
-            accepted = flags.filter(F.col("__sure")).drop(*drop_cols)
-            out = accepted if out is None else out.unionByName(accepted)
-            # __sure is constant across a point's rows (one row per point
-            # at n=1; exactly n_neighbors rows per sure point at n>1, the
-            # __cnt == n_neighbors guard), so the sure POINT count falls
-            # out of the sure ROW count on the checkpointed blocks. Only
-            # when it equals the live point count is every point answered
-            # — a point whose ring held no candidate has NO rows here and
-            # must still escalate to the coarser fallback rounds.
-            n_sure = flags.filter(F.col("__sure")).count() // max(n_neighbors, 1)
-            n_remaining -= n_sure
-            if n_remaining == 0:
-                return out
-            remaining = remaining.join(
-                flags.filter(F.col("__sure")).select(point_id).dropDuplicates(),
-                point_id,
-                "left_anti",
+    if dim_strategy not in ("broadcast", "shuffle"):
+        raise ValueError(f"unknown dim_strategy {dim_strategy!r}")
+    carried = [c for c in points.columns if c != point_id]
+    # decouple from the input file count; the hash partitioning by point_id
+    # is what every round's aggregate reuses
+    state = points.repartition(cores, point_id)
+    dist = distance_m_col(F.col(lon), F.col(lat), F.col(tlon), F.col(tlat))
+    hit = F.struct(dist.alias("dist_m"), *ring_cols)
+    top_n = F.slice(
+        F.array_sort(F.collect_list(F.when(F.col(tlon).isNotNull(), hit))),
+        1, n_neighbors,
+    )
+    for i, res in enumerate(res_list):
+        key = C.cell_sql(_q(lon), _q(lat), res)
+        if i:
+            key = f"CASE WHEN NOT __done THEN {key} END"
+        dim = expand_targets_to_ring(narrow, res, k_ring, tlon, tlat)
+        if dim_strategy == "broadcast":
+            dim = dim.withColumnRenamed("cell", "__dim_cell")
+            cand = state.join(
+                F.broadcast(dim), F.expr(key) == dim["__dim_cell"], "left"
             )
         else:
-            accepted = ranked
-            out = accepted if out is None else out.unionByName(accepted)
-    return out
+            from .pip_join import salted_cell_join
+
+            cand = salted_cell_join(
+                state.withColumn("__cell", F.expr(key)), dim, n_salt=n_salt,
+                how="left",
+            )
+        ans = top_n
+        if i:
+            ans = F.when(F.first("__done"), F.first("__ans")).otherwise(ans)
+        state = cand.groupBy(point_id).agg(
+            *[F.first(c).alias(c) for c in carried],
+            *([F.first("__done").alias("__done")] if i else []),
+            ans.alias("__ans"),
+        )
+        if i < len(res_list) - 1:
+            proven = (
+                f"size(__ans) = {n_neighbors} AND try_element_at(__ans, "
+                f"{n_neighbors}).dist_m < "
+                f"{_ring_guarantee_sql(res, k_ring, lon, lat)}"
+            )
+            state = state.withColumn(
+                "__done", F.expr(f"__done OR ({proven})" if i else proven)
+            )
+    hit_cols = ", ".join(f"'{c}', h.{_q(c)}" for c in (*ring_cols, "dist_m"))
+    ranked = state.select(point_id, *carried, F.expr(
+        f"inline(transform(__ans, (h, i) -> "
+        f"named_struct({hit_cols}, 'knn_rank', i + 1)))"
+    ))
+    if len(targets.columns) > len(ring_cols):
+        payload = targets if dim_strategy == "shuffle" else F.broadcast(targets)
+        ranked = ranked.join(payload, ring_cols)
+    return ranked.select(*points.columns, *targets.columns, "dist_m", "knn_rank")

@@ -431,11 +431,14 @@ def salted_cell_join(
     dim_cells: DataFrame,
     n_salt: int = 8,
     cell_col_name: str = "__cell",
+    how: str = "inner",
 ) -> DataFrame:
     """Shuffle cell join with salting, for dimension sides too large to
     broadcast: fact rows pick ``salt = pmod(hash(point_id-ish cols), n_salt)``
     and the dim side is replicated n_salt times, so one hot urban cell
     spreads over ``n_salt`` reducers. AQE skew-join handles residual skew.
+    ``how='left'`` keeps every fact row (null-extended when its cell, or
+    its NULL key, matches nothing), as the kNN ladder's rounds need.
     """
     # the salt must be DETERMINISTIC per row: monotonically_increasing_id
     # depends on partition layout and row order, so a task retry or
@@ -464,7 +467,7 @@ def salted_cell_join(
     joined = pts.join(
         dim,
         (pts[cell_col_name] == dim["__dim_cell"]) & (pts["__salt"] == dim["__salt"]),
-        "inner",
+        how,
     )
     return joined.drop("__salt", "__dim_cell")
 

@@ -1,7 +1,7 @@
 """Materialization-pinning seam: one place to choose HOW a multi-consumer
 frame is pinned.
 
-Eighteen hot paths in this engine materialize an intermediate frame once so
+Sixteen hot paths in this engine materialize an intermediate frame once so
 that N downstream consumers (different-keyed joins, both sides of a
 self-join, iterative rounds) do not each re-execute its lineage — without a
 pin the dominant corpus/payload scan runs once per consumer (measured 2-6×

@@ -1471,9 +1471,12 @@ def knn_nearest_street(
 ) -> DataFrame:
     """J10: nearest street per point via k-ring candidate expansion with
     guarantee-based escalation (exact — value-checked against the oracle's
-    brute-force cross join). ``dim_strategy='shuffle'`` exercises the
-    salted shuffle join for target sets beyond broadcast size (the
-    reference's national imports, ShapeReader.java:189-201)."""
+    brute-force cross join). The ladder is one lazy plan: the points
+    shuffle once by ``point_id`` and the three rounds run as a narrow chain
+    in the same stage, so building the frame runs no job.
+    ``dim_strategy='shuffle'`` exercises the salted shuffle join for target
+    sets beyond broadcast size (the reference's national imports,
+    ShapeReader.java:189-201)."""
     from .operators import knn as KN
     from .sources import streets as ST
     from .sources import synthetic as S

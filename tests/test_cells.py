@@ -97,18 +97,22 @@ def test_cell_col_matches_numpy(spark):
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(42)
-    lon = rng.uniform(-180, 180, 1000)
-    lat = rng.uniform(-90, 90, 1000)
+    # res-13 cell edges and their float neighbours, plus the domain bounds
+    k = np.array([0, 1, 4095, 4096, 8191, 8192], dtype=np.float64)
+    edges = np.concatenate([k, np.nextafter(k, -1), np.nextafter(k, 1e9)]) / 8192
+    lon = np.concatenate([rng.uniform(-180, 180, 1000), edges * 360 - 180])
+    lat = np.concatenate([rng.uniform(-90, 90, 1000), edges * 180 - 90])
     pdf = pd.DataFrame({"lon": lon, "lat": lat})
     df = spark.createDataFrame(pdf)
     for res in (0, 7, 13, 26):
-        got = (
-            df.select(cells.cell_col("lon", "lat", res).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
+        got = df.select(
+            cells.cell_col("lon", "lat", res).alias("c"),
+            F.expr(cells.cell_sql("lon", "lat", res)).alias("s"),
+        ).toPandas()
         want = cells.encode_cells(lon, lat, res)
-        assert (got == want).all(), f"res={res}"
+        assert (got["c"].to_numpy() == want).all(), f"res={res}"
+        # the SQL twin parsed by Spark (the kNN ladder's form) is identical
+        assert (got["s"].to_numpy() == want).all(), f"res={res}"
 
 
 def test_cell_sql_matches_numpy():

@@ -89,8 +89,10 @@ def test_street_catalog_refine_is_jvm_only(spark):
 def test_knn_no_cartesian_no_python_rows(spark):
     a = audit_plan(_q("knn_nearest_street")(spark, SF))
     assert not a["has_batch_eval_python"]
-    # candidate generation is a cell equi-join, not a cross join
+    # candidate generation is a cell equi-join, not a cross join, and the
+    # ring offsets are a literal generator, not a nested-loop join
     assert "CartesianProduct" not in a["plan"]
+    assert "BroadcastNestedLoopJoin" not in a["plan"]
 
 
 def test_dedup_minhash_plan_shape(spark):

@@ -87,7 +87,7 @@ def test_knn_shuffle_path_vs_oracle(spark, con):
         df = P.knn_nearest_street(spark, SF, k=1, dim_strategy="shuffle")
         plan = df._jdf.queryExecution().executedPlan().toString()
         # candidate join must be a shuffled equi-join — never a cartesian
-        # product; the only broadcast left is the 9-row ring-offsets dim
+        # product
         assert "CartesianProduct" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         got = df.toPandas()
@@ -286,3 +286,120 @@ def test_multires_matches_brute_force_on_random_worlds(spark):
             for r in brute.collect()
         }
         assert got == want, f"round {round_i}: multires != brute force"
+
+
+def test_multires_ladder_is_one_lazy_chain(spark):
+    """Building the 3-res ladder runs no Spark job (no driver count, no pin);
+    under the broadcast strategy the plan has exactly one non-broadcast
+    exchange (the point shuffle every round reuses); collecting it runs at
+    most 8 jobs."""
+    from plan_audit import audit_plan
+
+    from housenumbercore_spark.operators import knn as KN
+    from housenumbercore_spark.sources import streets as ST
+    from housenumbercore_spark.sources import synthetic as S
+
+    pts = S.points_df(spark, SF).select("point_id", "lon", "lat")
+    targets = ST.street_points_df(spark, SF)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    out = KN.knn_nearest_multires(pts, targets, res_list=P.KNN_RES_LIST)
+    assert sched.nextJobId() == j0
+    audit = audit_plan(out)
+    assert audit["n_shuffles"] == 1, audit["plan"]
+    assert "SortAggregate" not in audit["plan"]
+    j1 = sched.nextJobId()
+    rows = out.collect()
+    assert sched.nextJobId() - j1 <= 8
+    assert len(rows) == pts.count()
+
+
+_FAULT_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, Window as W, functions as F
+from housenumbercore_spark.geo.distance import distance_m_col
+from housenumbercore_spark.operators import knn as KN
+
+marks = sys.argv[1]
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+
+
+def fail_once(where, fail_partitions):
+    # fails the FIRST attempt of the chosen partitions part-way through
+    # their rows; nondeterministic, so the optimizer keeps it where it is
+    def f(i):
+        tc = TaskContext.get()
+        if (tc.attemptNumber() == 0 and tc.partitionId() in fail_partitions
+                and i % 7 == 3):
+            open(os.path.join(marks, f"{where}-{tc.stageId()}-"
+                              f"{tc.partitionId()}"), "w").close()
+            raise RuntimeError(f"injected {where} failure")
+        return True
+    return F.udf(f, "boolean").asNondeterministic()
+
+
+# deterministic scatters: last res 2 (90-degree cells) ring-covers them
+pts = spark.range(0, 400, numPartitions=4).select(
+    F.col("id").alias("point_id"),
+    ((F.col("id") * 7919) % 12000 / 100.0 - 60.0).alias("lon"),
+    ((F.col("id") * 104729) % 12000 / 100.0 - 55.0).alias("lat"))
+targets = spark.range(0, 30, numPartitions=2).select(
+    F.col("id").alias("street_key"), F.concat(F.lit("t"), "id").alias("name"),
+    ((F.col("id") * 6007) % 12000 / 100.0 - 60.0).alias("slon"),
+    ((F.col("id") * 3001) % 12000 / 100.0 - 55.0).alias("slat"))
+out = {}
+for n, strategy in ((1, "broadcast"), (2, "broadcast"), (1, "shuffle")):
+    # 'before' runs in the point scan, ahead of the ladder's one point
+    # shuffle; 'after' runs on the ladder's output, in the stage that
+    # executes the round chain
+    got = KN.knn_nearest_multires(
+        pts.filter(fail_once("before", {1, 2})("point_id")), targets,
+        res_list=[12, 7, 2], n_neighbors=n, dim_strategy=strategy,
+    ).filter(fail_once("after", {0})("point_id"))
+    got = sorted((r.point_id, r.knn_rank, r.street_key, round(r.dist_m, 6))
+                 for r in got.collect())
+    w = W.partitionBy("point_id").orderBy("dist_m", "street_key")
+    want = (pts.crossJoin(targets)
+            .withColumn("dist_m", distance_m_col(F.col("lon"), F.col("lat"),
+                                                 F.col("slon"), F.col("slat")))
+            .withColumn("knn_rank", F.row_number().over(w))
+            .filter(F.col("knn_rank") <= n))
+    want = sorted((r.point_id, r.knn_rank, r.street_key, round(r.dist_m, 6))
+                  for r in want.collect())
+    out[f"{n}-{strategy}"] = {"same": got == want, "n": len(got)}
+print(json.dumps(out))
+spark.stop()
+"""
+
+
+def test_ladder_task_retries_keep_exact_answers(tmp_path):
+    """Fault injection on a ``local[2,2]`` master (one retry per task): the
+    first attempt of chosen partitions fails once before the ladder's point
+    shuffle and once in the stage that runs the round chain. The retried
+    tasks must reproduce the brute-force cross-join answer exactly, for
+    n_neighbors 1 and 2 and for the salted shuffle strategy."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FAULT_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert res == {k: {"same": True, "n": 400 * int(k[0])}
+                   for k in ("1-broadcast", "2-broadcast", "1-shuffle")}, res
+    stages = {}
+    for m in os.listdir(tmp_path):
+        where, stage, _ = m.split("-")
+        stages.setdefault(where, set()).add(stage)
+    # both injections really fired, and in different stages
+    assert set(stages) == {"before", "after"}
+    assert not stages["before"] & stages["after"]
