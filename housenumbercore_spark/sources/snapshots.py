@@ -17,9 +17,10 @@ pattern over plain parquet — no Iceberg runtime is required:
   skewed partition over several tasks and files;
 - a snapshot is a JSON manifest (``_meta/v<N>.json``) listing the data
   directories (with their partition values, row counts, stats and the
-  operation that wrote them) that make up the table at version N; its
-  EXCLUSIVE create is the commit's linearization point;
-- ``_meta/VERSION`` is a one-line pointer cache flipped after it.
+  operation that wrote them) that make up the table at version N. Its
+  EXCLUSIVE create is the commit, and the newest manifest is the table's
+  version: manifests are immutable and never deleted, so ``_meta/`` holds
+  no mutable file at all.
 
 Readers resolve the version once at plan time and scan only the listed
 directories, so a concurrent commit NEVER changes a running query
@@ -64,7 +65,8 @@ DATA = "data"
 
 
 class CommitConflict(RuntimeError):
-    """The VERSION pointer moved between manifest read and commit."""
+    """Another writer created the manifest of the version this commit was
+    built for (its parent is no longer the newest manifest)."""
 
 
 def _read_text(fs, jvm, jpath) -> str | None:
@@ -79,17 +81,6 @@ def _read_text(fs, jvm, jpath) -> str | None:
         return bytes(baos.toByteArray()).decode("utf-8")
     finally:
         stream.close()
-
-
-def _write_tmp(spark: SparkSession, path: str, text: str):
-    jvm, fs, jpath = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp.{uuid.uuid4().hex}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
-    return jvm, fs, jpath, tmp
 
 
 def _claim_exclusive(jvm, fs, path: str) -> bool:
@@ -141,7 +132,13 @@ def _write_text_new(spark: SparkSession, path: str, text: str) -> None:
     CommitConflict instead of silent corruption. The claim file is removed
     on success; a crash between claim and rename leaves it behind, and the
     next committer of that version reports it for manual repair."""
-    jvm, fs, jpath, tmp = _write_tmp(spark, path, text)
+    jvm, fs, jpath = _hadoop_fs(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp.{uuid.uuid4().hex}")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(bytearray(text.encode("utf-8")))
+    finally:
+        stream.close()
     claim = f"{path}.claim"
     if not _claim_exclusive(jvm, fs, claim):
         fs.delete(tmp, False)
@@ -156,8 +153,7 @@ def _write_text_new(spark: SparkSession, path: str, text: str) -> None:
             fs.delete(tmp, False)
             raise CommitConflict(
                 f"{path} already exists — another writer committed this "
-                "version first (if no writer is active, an aborted commit "
-                "left this manifest behind; delete it to repair)"
+                "version first"
             )
         readback = _read_text(fs, jvm, jpath)
         if readback != text:
@@ -170,19 +166,13 @@ def _write_text_new(spark: SparkSession, path: str, text: str) -> None:
         fs.delete(jclaim, False)
 
 
-def _write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
-    """Overwrite ``path`` via tmp-file + rename: used only for the VERSION
-    pointer. On filesystems whose rename won't overwrite, there is a
-    delete→rename window with no pointer file; :func:`current_version`
-    falls back to the newest manifest for exactly that case."""
-    jvm, fs, jpath, tmp = _write_tmp(spark, path, text)
-    if not fs.rename(tmp, jpath):
-        fs.delete(jpath, False)
-        if not fs.rename(tmp, jpath):
-            raise IOError(f"cannot commit {path}")
-
-
-def _max_manifest_version(jvm, fs, table: str) -> int | None:
+def current_version(spark: SparkSession, table: str) -> int | None:
+    """Version the table is at: the newest ``_meta/v<N>.json`` (None when
+    there is none). The exclusive manifest create is the commit (data is
+    fully written before it), so one listing of ``_meta/`` is the whole
+    lookup; files other than manifests (claims, tmp files, checksum
+    sidecars, a ``VERSION`` file left by older code) are ignored."""
+    jvm, fs, _ = _hadoop_fs(spark, table)
     meta = jvm.org.apache.hadoop.fs.Path(f"{table}/{META}")
     if not fs.exists(meta):
         return None
@@ -196,33 +186,6 @@ def _max_manifest_version(jvm, fs, table: str) -> int | None:
                 continue
             best = n if best is None else max(best, n)
     return best
-
-
-def current_version(spark: SparkSession, table: str) -> int | None:
-    """Version the table is at: max(VERSION pointer, newest manifest).
-
-    The commit's linearization point is the EXCLUSIVE manifest create
-    (data is fully written before it) — the pointer is a convenience
-    cache flipped afterwards. So a manifest newer than the pointer is a
-    completed commit whose writer died (or has not yet flipped) between
-    manifest create and pointer flip; exposing it is the linearizable
-    completion of that commit. Taking the max (rather than preferring
-    the pointer when present) also covers the delete→rename pointer-swap
-    window on filesystems without overwriting rename, AND prevents the
-    wedge where a stale pointer makes every subsequent writer resolve
-    the dead commit's parent, collide on its manifest name, and be told
-    to delete a COMMITTED manifest as 'aborted' — destroying the commit."""
-    jvm, fs, _ = _hadoop_fs(spark, table)
-    txt = _read_text(
-        fs, jvm, jvm.org.apache.hadoop.fs.Path(f"{table}/{META}/VERSION")
-    )
-    ptr = int(txt.strip()) if txt else None
-    mx = _max_manifest_version(jvm, fs, table)
-    if ptr is None:
-        return mx
-    if mx is not None and mx > ptr:
-        return mx
-    return ptr
 
 
 def load_snapshot(spark: SparkSession, table: str, version: int) -> dict:
@@ -377,7 +340,6 @@ def _commit(spark: SparkSession, table: str, manifest: dict) -> int:
     # loser raises CommitConflict without touching the winner's manifest
     v = manifest["version"]
     _write_text_new(spark, f"{table}/{META}/v{v}.json", json.dumps(manifest))
-    _write_text_atomic(spark, f"{table}/{META}/VERSION", str(v))
     return v
 
 
@@ -673,8 +635,8 @@ def merge_upsert_snapshot_table(
     """The Workcache diff protocol (Workcache.java:243-424: new → INSERT,
     changed → UPDATE, gone → DELETE) as ONE snapshot commit — the engine's
     only merge write-back. Keys match null-safely; readers keep the
-    pre-merge snapshot until the atomic pointer flip, and the pre-merge
-    version stays time-travelable.
+    pre-merge snapshot until the exclusive manifest create, and the
+    pre-merge version stays time-travelable.
 
     ``updates`` must carry exactly the table's columns and types (nested
     nullability aside): drift raises ``ValueError`` naming the missing,

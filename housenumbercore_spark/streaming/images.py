@@ -103,11 +103,12 @@ def run_image_gate(
     once END TO END: the checkpoint's file log picks each input file up
     once, and each micro-batch commits atomically as one append whose
     manifest operation records its batch id and checkpoint — so readers
-    never observe a torn batch (nothing is visible until the pointer
-    flip), a batch id already in the table's history is skipped on
-    replay, and a crash between data write and pointer flip leaves only
-    an orphaned (invisible) data dir that :func:`snapshots.vacuum`
-    reclaims. Returns the table's accepted/rejected totals.
+    never observe a torn batch (nothing is visible until the exclusive
+    manifest create), a batch id already in the table's history is
+    skipped on replay, and a crash between data write and manifest create
+    leaves only an orphaned (invisible) data dir that
+    :func:`snapshots.vacuum` reclaims. Returns the table's
+    accepted/rejected totals, counted by one aggregate.
 
     Accepted and rejected rows land in ONE table with the ``gate_ok``
     flag and ``batch_id`` column (filter on read); every version is
@@ -167,10 +168,10 @@ def run_image_gate(
     )
     q.awaitTermination()
     try:
-        cur = SN.read_snapshot(spark, out_table)
-        return {
-            "accepted_total": cur.filter(F.col("gate_ok")).count(),
-            "rejected_total": cur.filter(~F.col("gate_ok")).count(),
-        }
+        totals = SN.read_snapshot(spark, out_table).agg(
+            F.count(F.when(F.col("gate_ok"), 1)).alias("accepted_total"),
+            F.count(F.when(~F.col("gate_ok"), 1)).alias("rejected_total"),
+        )
+        return totals.first().asDict()
     except FileNotFoundError:  # zero input files → no batch committed
         return {"accepted_total": 0, "rejected_total": 0}

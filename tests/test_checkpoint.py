@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from housenumbercore_spark import checkpoint as CP
 from housenumbercore_spark.sources import snapshots as SN
+from spark_subprocess import run_script
 
 SF = "/root/testdata/sf0.001"
 FP = "snap-001"
@@ -335,17 +336,7 @@ def test_task_retries_keep_observed_stats_exact(tmp_path):
     Observation accumulates). The failed attempts' partial aggregates must
     not leak: every entry's rows/xor/sum equal verify_checkpoints'
     recomputation, and the read-back equals a single-shot build."""
-    import subprocess
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "PYTHONPATH": root}
-    proc = subprocess.run(
-        [sys.executable, "-c", _FAULT_SCRIPT, str(tmp_path)],
-        capture_output=True, text=True, env=env, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    res = run_script(_FAULT_SCRIPT, str(tmp_path))
     stages = {}
     for m in os.listdir(tmp_path):
         if "-" in m:

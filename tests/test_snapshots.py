@@ -161,9 +161,9 @@ class TestHistoryRollbackVacuum:
     ):
         """Optimistic concurrency: two writers race for the same version
         slot; the loser fails at the EXCLUSIVE manifest create, the
-        winner's committed manifest and the pointer are untouched (a
-        clobbering loser would silently replace committed contents), and
-        the loser's orphaned data dir is reclaimed by vacuum."""
+        winner's committed manifest and the table's version are untouched
+        (a clobbering loser would silently replace committed contents),
+        and the loser's orphaned data dir is reclaimed by vacuum."""
         SN.snapshot_write(
             _df(spark, [(40, 0, "winner")]), table, ["bucket"], mode="append"
         )
@@ -208,23 +208,6 @@ class TestHistoryRollbackVacuum:
             SN.rollback(spark, table, 1)
         assert SN.current_version(spark, table) == 2
         assert SN.read_snapshot(spark, table).count() == 1
-
-    def test_pointer_swap_window_fallback(self, spark, table):
-        """current_version falls back to the newest manifest when the
-        VERSION pointer file is momentarily absent (the delete->rename
-        swap window on filesystems without overwriting rename, or a crash
-        between manifest write and pointer flip)."""
-        import os
-
-        os.remove(f"{table}/_meta/VERSION")
-        assert SN.current_version(spark, table) == 1
-        assert SN.read_snapshot(spark, table).count() == 20
-        # a subsequent commit heals the pointer
-        SN.snapshot_write(
-            _df(spark, [(2000, 0, "heal")]), table, ["bucket"], mode="append"
-        )
-        with open(f"{table}/_meta/VERSION") as f:
-            assert f.read().strip() == "2"
 
 
 class TestMergeOnSnapshot:
@@ -525,11 +508,82 @@ class TestExpectedParent:
     def test_unset_expected_parent_keeps_default_resolution(self, spark, table):
         """Without expected_parent the parent is resolved at write start —
         an append that does not read the table commits fine on top of any
-        current version."""
+        current version. Each commit writes one file under ``_meta/``, its
+        immutable manifest (plus the checksum sidecar): nothing there is
+        rewritten after it is created."""
         SN.snapshot_write(_df(spark, [(100, 0, "a-100")]), table, ["bucket"])
         v = SN.snapshot_write(_df(spark, [(101, 1, "b-101")]), table, ["bucket"])
         assert v == 3
         assert SN.read_snapshot(spark, table).count() == 22
+        assert sorted(os.listdir(f"{table}/_meta")) == sorted(
+            f for n in (1, 2, 3) for f in (f"v{n}.json", f".v{n}.json.crc")
+        )
+
+
+class TestConcurrentBlindCommits:
+    def test_concurrent_blind_commits_and_reader_never_raise(
+        self, spark, tmp_path
+    ):
+        """4 blind writers each make 15 ``overwrite_partitions`` commits of
+        their own partition while a reader resolves the current version
+        and loads its manifest in a loop. No call may raise (a mutable
+        version file swapped by one commit while another call read it made
+        both writers and readers fail with FileNotFoundException), the
+        versions are exactly 1..60, the reader never sees the version go
+        back, and each partition holds its writer's last commit."""
+        import threading
+
+        table = str(tmp_path / "tbl")
+        writers, commits = 4, 15
+        errors: list[BaseException] = []
+        versions: list[int] = []
+        seen: list[int] = []
+        done = threading.Event()
+
+        def write(key):
+            try:
+                for j in range(commits):
+                    v = SN.snapshot_write(
+                        _df(spark, [(100 * key + j, key, f"w{key}-{j}")]),
+                        table, ["bucket"], mode="overwrite_partitions",
+                    )
+                    versions.append(v)
+            except BaseException as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        def read():
+            try:
+                while not done.is_set():
+                    v = SN.current_version(spark, table)
+                    if v is not None:
+                        assert SN.load_snapshot(spark, table, v)["version"] == v
+                        seen.append(v)
+            except BaseException as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=write, args=(k,)) for k in range(writers)
+        ]
+        reader = threading.Thread(target=read)
+        reader.start()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        done.set()
+        reader.join()
+        assert errors == [], errors
+        assert sorted(versions) == list(range(1, writers * commits + 1))
+        assert SN.current_version(spark, table) == writers * commits
+        assert seen == sorted(seen)
+        got = {
+            (r.id, r.bucket, r.payload)
+            for r in SN.read_snapshot(spark, table).collect()
+        }
+        assert got == {
+            (100 * k + commits - 1, k, f"w{k}-{commits - 1}")
+            for k in range(writers)
+        }
 
 
 class TestConcurrentMerge:
@@ -657,32 +711,6 @@ class TestTwoProcessCommitRace:
 
 class TestRecoveryAndEdgeFindings:
     """Round-5 review-pass regressions (crash recovery + merge edges)."""
-
-    def test_stale_pointer_does_not_wedge_table(self, spark, table):
-        """A writer that died AFTER the exclusive manifest create but
-        BEFORE the pointer flip left a complete commit behind: the
-        pointer says v1 while v2.json + its data exist. current_version
-        must expose v2 (the manifest create is the linearization point);
-        the previous pointer-wins resolution made every later writer
-        resolve parent=1, collide on v2.json, and advise deleting the
-        COMMITTED manifest as 'aborted'."""
-        SN.snapshot_write(
-            _df(spark, [(100, 0, "v2")]), table, ["bucket"], mode="append"
-        )
-        # simulate the crash window: regress the pointer behind the
-        # manifest (through the Hadoop FS writer — a POSIX rewrite would
-        # desync the ChecksumFileSystem's .crc sidecar)
-        SN._write_text_atomic(spark, f"{table}/_meta/VERSION", "1")
-        assert SN.current_version(spark, table) == 2
-        assert SN.read_snapshot(spark, table).count() == 21
-        # the next commit builds on v2 and heals the pointer
-        v3 = SN.snapshot_write(
-            _df(spark, [(101, 0, "v3")]), table, ["bucket"], mode="append"
-        )
-        assert v3 == 3
-        with open(f"{table}/_meta/VERSION") as f:
-            assert f.read().strip() == "3"
-        assert SN.read_snapshot(spark, table).count() == 22
 
     def test_merge_delete_empty_string_partition_key(self, spark):
         """A delete keyed on a partition column value of '' must hit the

@@ -31,7 +31,7 @@ def _write_batch(spark, src_dir, start, n, corrupt_every=None):
 
 def _write_orphan(spark, tbl, n, gate_ok=True):
     """Simulate a crashed first attempt: batch 0's data dir written with
-    ``n`` (wrong) rows, but the commit's pointer never flipped."""
+    ``n`` (wrong) rows, but the commit's manifest was never created."""
     orphan = f"{tbl}/data/{uuid.uuid4().hex}"
     IMG.images_df(spark, n).withColumn("gate_ok", F.lit(gate_ok)).withColumn(
         "batch_id", F.lit(0)
@@ -137,7 +137,7 @@ def test_snapshot_sink_gate_basic_and_audit_trail(spark, tmp_path):
 def test_snapshot_sink_crash_replay_commit_level_exactly_once(
     spark, tmp_path
 ):
-    """Crash BETWEEN data write and pointer flip leaves an orphaned,
+    """Crash BETWEEN data write and manifest create leaves an orphaned,
     INVISIBLE data dir (readers never saw a torn batch); the replay
     re-commits the batch once, and an already-committed batch id is
     skipped on replay even if the streaming checkpoint lost the commit."""

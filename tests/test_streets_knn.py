@@ -381,19 +381,11 @@ def test_ladder_task_retries_keep_exact_answers(tmp_path):
     shuffle and once in the stage that runs the round chain. The retried
     tasks must reproduce the brute-force cross-join answer exactly, for
     n_neighbors 1 and 2 and for the salted shuffle strategy."""
-    import json
     import os
-    import subprocess
-    import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "PYTHONPATH": root}
-    proc = subprocess.run(
-        [sys.executable, "-c", _FAULT_SCRIPT, str(tmp_path)],
-        capture_output=True, text=True, env=env, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    from spark_subprocess import run_script
+
+    res = run_script(_FAULT_SCRIPT, str(tmp_path))
     assert res == {k: {"same": True, "n": 400 * int(k[0])}
                    for k in ("1-broadcast", "2-broadcast", "1-shuffle")}, res
     stages = {}
