@@ -100,16 +100,17 @@ def parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
     return pack(parent_res, cell_ix(cell) >> shift, cell_iy(cell) >> shift)
 
 
-def children(cell: int) -> np.ndarray:
-    """The 4 direct children of one cell (res+1)."""
-    r = int(cell_res(np.int64(cell)))
-    if r >= MAX_RES:
-        raise ValueError("cell already at MAX_RES")
-    ix = int(cell_ix(np.int64(cell))) << 1
-    iy = int(cell_iy(np.int64(cell))) << 1
-    xs = np.array([ix, ix + 1, ix, ix + 1], dtype=np.int64)
-    ys = np.array([iy, iy, iy + 1, iy + 1], dtype=np.int64)
-    return pack(r + 1, xs, ys)
+def children(cells, depth: int = 1) -> np.ndarray:
+    """The 4^depth descendants ``depth`` levels finer of each cell (one
+    resolution), flattened in input order."""
+    cells = np.atleast_1d(np.asarray(cells, dtype=np.int64))
+    r = int(cell_res(cells[0])) if cells.size else 0
+    if r + depth > MAX_RES:
+        raise ValueError(f"children would exceed MAX_RES={MAX_RES}")
+    offs = np.arange(1 << depth, dtype=np.int64)
+    ix = (cell_ix(cells) << depth)[:, None, None] + offs[None, :, None]
+    iy = (cell_iy(cells) << depth)[:, None, None] + offs[None, None, :]
+    return pack(r + depth, ix, iy).ravel()
 
 
 def k_ring(cells: np.ndarray, k: int = 1) -> np.ndarray:

@@ -6,23 +6,29 @@ area (/root/reference/src/de/regioosm/theoreticalhousenumbercore/
 TheoreticalHousenumbers.java:879-883, 1062-1065, 1195-1199) — with ONE
 set-based plan over all areas at once:
 
-1. **Cover** every admin polygon with grid cells at a join resolution
-   (superset cover from the polygon's bbox, pruned to cells whose rectangle
-   actually intersects the polygon). Distributed ``mapInPandas`` over the
-   dimension; output is the narrow ``(cell, area_id)`` build side.
-2. **Encode** every point's cell as pure column arithmetic (whole-stage
-   codegen — zero Python on the fact path).
+1. **Cover** every admin polygon with a disjoint two-level cell cover
+   (:func:`cover_cells`): interior cells at the join resolution, boundary
+   cells split one level finer. Distributed ``mapInPandas`` over the
+   dimension; output is the narrow ``(cell, area_id, refine payload)``
+   build side.
+2. **Encode** every point's cell at both levels as pure column arithmetic
+   (whole-stage codegen — zero Python on the fact path), exploded into one
+   probe row per level.
 3. **Equi-join** fact.cell == dim.cell. The dimension side is broadcast by
    default (a 10⁵-polygon dim covers to a few million narrow rows ≪ the
    64 MB broadcast threshold), so the 10¹²-row fact side is *never
    shuffled*. For dims too large to broadcast, :func:`salted_cell_join`
    provides a shuffle join with hot-cell salting.
-4. **Refine** candidates with the exact predicate as one whole-stage
-   codegen expression (:func:`jvm_refine_expr`): each cover row carries
-   the ring edges overlapping its cell, an off-boundary reference point
-   and that point's membership, so parity transport along ref→point
-   decides covers/contains. Full (interior) cells carry no edges and are
-   sure hits. No Python runs on the fact path; the numpy kernels of
+4. **Refine** candidates with the exact predicate as one JVM expression
+   (:func:`jvm_refine_expr`): each boundary cover row carries the ring
+   edges overlapping its cell, an off-boundary reference point and that
+   point's membership, so parity transport along ref→point decides
+   covers/contains. Full (interior) cells carry no edges and are sure
+   hits. No Python runs on the fact path, but the refine's higher-order
+   functions (``aggregate``/``exists``) are not code-generated in Spark
+   4.1: the filter holding them runs interpreted outside the whole-stage
+   codegen stage, at a cost of candidates × edges per cover row — which
+   the finer boundary level keeps small. The numpy kernels of
    geo.geometry are the test-side oracle for this expression.
 
 Scale notes (100 TB / 1000 executors): the only wide operation in the whole
@@ -56,6 +62,13 @@ REFINE_COLS = (
 # locality wins over refine savings here.
 COVER_MAX_CELLS_PER_AREA = 256
 
+# Boundary cells of the join resolution are split this many levels finer
+# (cover_cells). Measured on the perfbench assign inputs (seed 1): depth 1
+# cuts the refine's edge checks from 1.74 to 0.61 per candidate (7.4 to
+# 4.1 per boundary candidate); a depth-2 prototype built 3× the cover
+# rows and lost on ingest.
+COVER_EXTRA_DEPTH = 1
+
 
 def pick_join_res(areas: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax"),
                   max_cells: int = COVER_MAX_CELLS_PER_AREA, finest: int = 13) -> int:
@@ -86,7 +99,9 @@ def _boundary_cells(poly, res: int) -> np.ndarray:
     k_ring(1). Any boundary point is within cellsize/4 of a sample, hence
     inside the sample's cell or an adjacent one → always inside the padded
     set. This also catches long edges that cross cells containing no
-    vertex (which a vertex-cell test alone would miss).
+    vertex (which a vertex-cell test alone would miss). A cell outside the
+    set holds no boundary point in its closed rectangle, so it lies wholly
+    inside or wholly outside the polygon.
     """
     n = 1 << res
     step = min(360.0 / n, 180.0 / n) / 2.0
@@ -118,28 +133,141 @@ def _ring_edges(poly) -> np.ndarray:
     return np.concatenate(segs) if segs else np.empty((0, 4))
 
 
-def _parity(edges: np.ndarray, x: float, y: float) -> bool:
-    """Even-odd membership by ray casting over ALL ring edges (holes are
-    handled by parity naturally)."""
-    y0, y1 = edges[:, 1], edges[:, 3]
-    x0, x1 = edges[:, 0], edges[:, 2]
-    m = (y0 > y) != (y1 > y)
-    if not m.any():
-        return False
-    xi = x0[m] + (y - y0[m]) * (x1[m] - x0[m]) / (y1[m] - y0[m])
-    return bool(np.count_nonzero(xi > x) % 2)
+# (points × edges) elements per block of the dense parity test
+_PARITY_BLOCK = 1 << 20
 
 
-def _seg_point_dist(edges: np.ndarray, x: float, y: float) -> float:
-    dx, dy = edges[:, 2] - edges[:, 0], edges[:, 3] - edges[:, 1]
+def _parity(edges: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Even-odd membership of points by ray casting over ALL ring edges
+    (holes are handled by parity naturally); blocked over the points so
+    memory stays bounded for large rings."""
+    out = np.zeros(len(x), dtype=bool)
+    x0, y0, x1, y1 = (edges[None, :, k] for k in range(4))
+    step = max(1, _PARITY_BLOCK // max(len(edges), 1))
+    for s in range(0, len(x), step):
+        px, py = x[s:s + step, None], y[s:s + step, None]
+        m = (y0 > py) != (y1 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xi = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+        out[s:s + step] = np.count_nonzero(m & (xi > px), axis=1) % 2 == 1
+    return out
+
+
+def _seg_point_dist(edges: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Distance from points (x, y), shape (P, K), to edges (P, 4), row-wise."""
+    x0, y0, x1, y1 = (edges[:, k:k + 1] for k in range(4))
+    dx, dy = x1 - x0, y1 - y0
     L2 = dx * dx + dy * dy
-    t = np.clip(
-        ((x - edges[:, 0]) * dx + (y - edges[:, 1]) * dy) / np.where(L2 > 0, L2, 1),
-        0.0,
-        1.0,
+    t = np.clip(((x - x0) * dx + (y - y0) * dy) / np.where(L2 > 0, L2, 1), 0.0, 1.0)
+    return np.hypot(x0 + t * dx - x, y0 + t * dy - y)
+
+
+def _cell_edge_pairs(cells: np.ndarray, edges: np.ndarray, res: int):
+    """Sparse (cell index, edge index) pairs, sorted by cell then edge, for
+    every edge whose bbox overlaps a cell of ``cells`` (sorted, all at
+    ``res``) padded by 1e-9 of the cell width — a conservative superset:
+    extra edges cannot cross an in-cell segment, so they are harmless.
+
+    Pairs come from each edge's own index range, so the work is the
+    boundary's length in cells, not cells × edges."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    pad = w * 1e-9
+    ebx = np.minimum(edges[:, 0], edges[:, 2])
+    ebX = np.maximum(edges[:, 0], edges[:, 2])
+    eby = np.minimum(edges[:, 1], edges[:, 3])
+    ebY = np.maximum(edges[:, 1], edges[:, 3])
+
+    # one index wider on each side: a rounding slip of the floor can only
+    # add pairs, which the exact bound test below drops again
+    def span(lo, hi, off, size):
+        a = np.floor((lo - pad + off) / size).astype(np.int64) - 1
+        b = np.floor((hi + pad + off) / size).astype(np.int64) + 1
+        return np.clip(a, 0, n - 1), np.clip(b, 0, n - 1)
+
+    ix0, ix1 = span(ebx, ebX, 180.0, w)
+    iy0, iy1 = span(eby, ebY, 90.0, h)
+    ny = iy1 - iy0 + 1
+    cnt = (ix1 - ix0 + 1) * ny
+    e = np.repeat(np.arange(len(edges)), cnt)
+    k = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    cid = C.pack(res, ix0[e] + k // ny[e], iy0[e] + k % ny[e])
+    hit = np.isin(cid, cells)
+    ci, e = np.searchsorted(cells, cid[hit]), e[hit]
+    lo, la, hi, ha = C.cell_bounds(cells[ci])
+    ok = ((ebX[e] >= lo - pad) & (ebx[e] <= hi + pad)
+          & (ebY[e] >= la - pad) & (eby[e] <= ha + pad))
+    ci, e = ci[ok], e[ok]
+    order = np.lexsort((e, ci))
+    return ci[order], e[order]
+
+
+def _split_boundary(cells: np.ndarray, poly, edges: np.ndarray, res: int):
+    """Split ``cells`` (all at ``res``) into calm cells — no boundary
+    point in the closed cell, so wholly inside or wholly outside — and
+    boundary cells: in the padded boundary set AND overlapped by some edge
+    bbox. → (calm, boundary, pair cell index into boundary, pair edge)."""
+    cells = np.sort(cells)
+    ci, ei = _cell_edge_pairs(cells, edges, res)
+    bnd = np.zeros(len(cells), dtype=bool)
+    bnd[ci] = True
+    bnd &= np.isin(cells, _boundary_cells(poly, res))
+    keep = bnd[ci]
+    return cells[~bnd], cells[bnd], (np.cumsum(bnd) - 1)[ci[keep]], ei[keep]
+
+
+# reference-point candidates inside a boundary cell, as (x, y) fractions of
+# its extent; the first one clear of every stored edge is used, the centre
+# (listed first) when none is
+_REF_FRACTIONS = np.array(
+    [(0.5, 0.5), (0.25, 0.25), (0.75, 0.25), (0.25, 0.75), (0.75, 0.75),
+     (0.382, 0.618), (0.618, 0.382), (0.137, 0.421)]
+)
+
+
+def _area_cover(poly, res: int):
+    """One area's disjoint two-level cover as row arrays:
+    (cells, full, ref_x, ref_y, ref_inside, edge lists)."""
+    edges = _ring_edges(poly)
+    bx = poly.bbox()
+    calm, split, _, _ = _split_boundary(
+        C.cover_bbox(bx[0], bx[1], bx[2], bx[3], res), poly, edges, res
     )
-    px, py = edges[:, 0] + t * dx, edges[:, 1] + t * dy
-    return float(np.min(np.hypot(px - x, py - y))) if len(edges) else np.inf
+    fine = res + COVER_EXTRA_DEPTH
+    calm_kids, bnd, ci, ei = _split_boundary(
+        C.children(split, COVER_EXTRA_DEPTH), poly, edges, fine
+    )
+
+    # a calm cell's centre decides the whole cell: keep it as full if inside
+    calm = np.concatenate([calm, calm_kids])
+    lo, la, hi, ha = C.cell_bounds(calm)
+    cx, cy = (lo + hi) / 2, (la + ha) / 2
+    inside = _parity(edges, cx, cy)
+    full, cx, cy = calm[inside], cx[inside], cy[inside]
+
+    # boundary cells: a reference point strictly inside the cell and
+    # off-boundary, and its membership (parity over ALL ring edges)
+    lo, la, hi, ha = C.cell_bounds(bnd)
+    w, h = hi - lo, ha - la
+    rx = lo[:, None] + _REF_FRACTIONS[None, :, 0] * w[:, None]
+    ry = la[:, None] + _REF_FRACTIONS[None, :, 1] * h[:, None]
+    near = np.full(rx.shape, np.inf)
+    np.minimum.at(near, ci, _seg_point_dist(edges[ei], rx[ci], ry[ci]))
+    pick = np.argmax(near > 1e-9 * np.maximum(w, h)[:, None], axis=1)
+    rows = np.arange(len(bnd))
+    rx, ry = rx[rows, pick], ry[rows, pick]
+    ends = np.cumsum(np.bincount(ci, minlength=len(bnd)))
+    edge_lists = [edges[ei[a:b]].tolist() for a, b in zip(np.r_[0, ends[:-1]], ends)]
+
+    n_full = len(full)
+    return (
+        np.concatenate([full, bnd]),
+        np.r_[np.ones(n_full, dtype=bool), np.zeros(len(bnd), dtype=bool)],
+        np.concatenate([cx, rx]),
+        np.concatenate([cy, ry]),
+        np.r_[np.ones(n_full, dtype=bool), _parity(edges, rx, ry)],
+        [[]] * n_full + edge_lists,
+    )
 
 
 def cover_cells(
@@ -148,9 +276,9 @@ def cover_cells(
     id_col: str = "area_id",
     wkb_col: str = "polygon",
 ) -> DataFrame:
-    """Explode the polygon dimension into refine-ready cover rows:
-    ``(cell, area_id, __pj_full, __pj_ref_x, __pj_ref_y, __pj_ref_inside,
-    __pj_edges)``.
+    """Explode the polygon dimension into a disjoint two-level cover of
+    refine-ready rows: ``(cell, area_id, __pj_full, __pj_ref_x, __pj_ref_y,
+    __pj_ref_inside, __pj_edges)``.
 
     The refine payload columns are DUNDER-RESERVED (like ``__cell``): the
     join in assign_points_to_areas duplicates dim columns onto the fact
@@ -158,19 +286,29 @@ def cover_cells(
     payload columns — an AMBIGUOUS_REFERENCE crash in the refine filter,
     or a silently dropped user column on the exact=False path.
 
-    Superset guarantee: a cell is emitted iff a corner/center is covered OR
-    the boundary (padded, exact — see _boundary_cells) touches it; no
-    covered point can sit in an unemitted cell.
+    Two levels, per area (cell ids encode their resolution, so the levels
+    never collide in the join):
 
-    The refine payload makes the exact point-in-polygon test a PURE JVM
-    expression downstream (jvm_refine_expr): for each cell we store the
-    ring edges whose bbox overlaps the cell (conservative superset — extra
-    edges cannot cross an in-cell segment, so they are harmless), a
-    reference point inside the cell that is provably off-boundary, and the
-    reference point's even-odd membership. A point P in the cell is inside
-    the polygon iff ref_inside XOR (segment ref→P properly crosses an odd
-    number of stored edges). Full cells (entirely interior) carry zero
-    edges, so the same expression short-circuits to ``__pj_ref_inside``.
+    - a cell of the bbox cover at ``res`` that no boundary point touches
+      is wholly inside or wholly outside, so its centre decides it: kept as
+      a FULL row (no edges, a sure hit) when inside, dropped when outside;
+    - a cell at ``res`` that the boundary touches is replaced by its
+      descendants ``COVER_EXTRA_DEPTH`` levels finer, each classified the
+      same way; only the boundary ones among them carry refine edges.
+
+    "Touches" is the padded boundary set (_boundary_cells) narrowed to
+    cells that some edge bbox overlaps. The cells of one area are
+    disjoint, so a point matches at most one of its rows; every covered
+    point sits in an emitted cell (superset guarantee).
+
+    A boundary row stores the ring edges whose bbox overlaps the cell,
+    a reference point inside the cell that is provably off-boundary, and
+    the reference point's even-odd membership. A point P in the cell is
+    inside the polygon iff ref_inside XOR (segment ref→P properly crosses
+    an odd number of stored edges) — jvm_refine_expr. The refine's cost is
+    candidates × edges, and splitting boundary cells one level finer cuts
+    both: fewer candidates fall in boundary cells, and each carries fewer
+    edges (see COVER_EXTRA_DEPTH).
 
     Scale note: the dim explodes to ≈ cover_cells × (1 + edges/cell) narrow
     rows; for dims too large to broadcast, use salted_cell_join and the
@@ -191,10 +329,12 @@ def cover_cells(
             ),
         ]
     )
+    cols = ["cell", "__pj_full", "__pj_ref_x", "__pj_ref_y",
+            "__pj_ref_inside", "__pj_edges"]
 
     def gen(batches):
         for pdf in batches:
-            rows: list[tuple] = []
+            parts: list[pd.DataFrame] = []
             for aid, wkb in zip(pdf[id_col].values, pdf[wkb_col].values):
                 # dimension rows are curated admin boundaries: a NULL /
                 # empty / non-areal geometry is a data-model error, not
@@ -205,67 +345,18 @@ def cover_cells(
                     if wkb is None:
                         raise ValueError("NULL geometry")
                     poly = G.parse_wkb(bytes(wkb))
-                    bx = poly.bbox()
+                    poly.bbox()  # non-areal / ring-less geometries raise here
                 except Exception as exc:
                     raise ValueError(
                         f"cover_cells: {id_col}={aid!r} has an unusable "
                         f"{wkb_col} ({type(exc).__name__}: {exc}) — the "
                         "polygon dimension must carry valid areal WKB"
                     ) from exc
-                cand = C.cover_bbox(bx[0], bx[1], bx[2], bx[3], res)
-                lo, la, hi, ha = C.cell_bounds(cand)
-                corner_all = np.ones(len(cand), dtype=bool)
-                corner_any = np.zeros(len(cand), dtype=bool)
-                for cx, cy in ((lo, la), (hi, la), (hi, ha), (lo, ha)):
-                    cov = G.covers(poly, cx, cy)
-                    corner_all &= cov
-                    corner_any |= cov
-                corner_any |= G.covers(poly, (lo + hi) / 2, (la + ha) / 2)
-                on_boundary = np.isin(cand, _boundary_cells(poly, res))
-                keep = corner_any | on_boundary
-                full = corner_all & ~on_boundary
-                all_edges = _ring_edges(poly)
-                ebx = np.minimum(all_edges[:, 0], all_edges[:, 2])
-                ebX = np.maximum(all_edges[:, 0], all_edges[:, 2])
-                eby = np.minimum(all_edges[:, 1], all_edges[:, 3])
-                ebY = np.maximum(all_edges[:, 1], all_edges[:, 3])
-                pad = (hi[0] - lo[0]) * 1e-9 if len(cand) else 0.0
-                for i in np.nonzero(keep)[0]:
-                    if full[i]:
-                        rows.append(
-                            (int(cand[i]), aid, True,
-                             float((lo[i] + hi[i]) / 2),
-                             float((la[i] + ha[i]) / 2), True, [])
-                        )
-                        continue
-                    em = (
-                        (ebX >= lo[i] - pad) & (ebx <= hi[i] + pad)
-                        & (ebY >= la[i] - pad) & (eby <= ha[i] + pad)
-                    )
-                    edges = all_edges[em]
-                    # reference point: strictly inside the cell, off-boundary
-                    w, h = hi[i] - lo[i], ha[i] - la[i]
-                    ref = None
-                    for fx, fy in ((0.5, 0.5), (0.25, 0.25), (0.75, 0.25),
-                                   (0.25, 0.75), (0.75, 0.75), (0.382, 0.618),
-                                   (0.618, 0.382), (0.137, 0.421)):
-                        rx, ry = lo[i] + fx * w, la[i] + fy * h
-                        if _seg_point_dist(edges, rx, ry) > 1e-9 * max(w, h):
-                            ref = (rx, ry)
-                            break
-                    if ref is None:  # pathological; fall back to center
-                        ref = (lo[i] + 0.5 * w, la[i] + 0.5 * h)
-                    rows.append(
-                        (int(cand[i]), aid, False, float(ref[0]), float(ref[1]),
-                         _parity(all_edges, ref[0], ref[1]),
-                         [e.tolist() for e in edges])
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["cell", id_col, "__pj_full", "__pj_ref_x",
-                             "__pj_ref_y", "__pj_ref_inside", "__pj_edges"],
-                )
+                part = pd.DataFrame(dict(zip(cols, _area_cover(poly, res))))
+                part.insert(1, id_col, aid)
+                parts.append(part)
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
 
     return areas.select(id_col, wkb_col).mapInPandas(gen, out_schema)
 
@@ -273,12 +364,19 @@ def cover_cells(
 def jvm_refine_expr(
     lon: str = "lon", lat: str = "lat", predicate: str = "covers"
 ) -> F.Column:
-    """Exact point-in-polygon as a pure whole-stage-codegen expression over
-    the cover_cells refine payload — boundary-inclusive (``covers``,
+    """Exact point-in-polygon as one JVM expression over the cover_cells
+    refine payload — boundary-inclusive (``covers``,
     ST_Covers, the default) or strict (``contains``, ST_Contains; the only
     difference is whether a point exactly ON a stored edge is accepted):
     even-odd parity transported from the cell's reference point along the
     segment ref→point, counting crossings with the cell's stored edges.
+
+    No Python runs, but ``aggregate`` and ``exists`` are not code-generated
+    in Spark 4.1 (CodegenFallback): the filter holding this expression
+    leaves the whole-stage codegen stage, and each lambda call over each
+    stored edge is interpreted. Its cost is candidates × edges per cover
+    row, which the two-level cover keeps small; full rows are decided
+    before any higher-order function runs.
 
     Degenerate cases (grid-derived data makes exact collinearity real):
 
@@ -313,8 +411,9 @@ def jvm_refine_expr(
     if predicate not in ("covers", "contains"):
         raise ValueError(f"unknown predicate {predicate!r}")
     edge_result = "true" if predicate == "covers" else "false"
+    # a full (interior) cell is a sure hit for either predicate
     return F.expr(
-        f"CASE WHEN {on_edge} THEN {edge_result} "
+        f"CASE WHEN __pj_full THEN true WHEN {on_edge} THEN {edge_result} "
         f"ELSE __pj_ref_inside != (({crossings}) % 2 = 1) END"
     )
 
@@ -322,8 +421,8 @@ def jvm_refine_expr(
 def seg_crossing_expr(
     x0: str = "x0", y0: str = "y0", x1: str = "x1", y1: str = "y1"
 ) -> F.Column:
-    """Inclusive segment-vs-boundary intersection as a pure codegen
-    expression: true iff segment (x0,y0)-(x1,y1) properly crosses OR touches
+    """Inclusive segment-vs-boundary intersection as one JVM expression
+    (interpreted ``exists``, like :func:`jvm_refine_expr`): true iff segment (x0,y0)-(x1,y1) properly crosses OR touches
     any edge in the cell's ``edges`` payload. Exactly mirrors the numpy
     oracle tests/geo_oracle.py (orientation signs + collinear bbox touch),
     so the JVM street refine matches it bit for bit. Replaces the
@@ -377,6 +476,16 @@ def seg_cover_cells_cols(
     return d.withColumn(out, cell).drop("__gx", "__gy")
 
 
+def probe_cells_col(lon: str, lat: str, res: int) -> F.Column:
+    """One probe row per cover level: ``explode`` of the point's cell at
+    ``res`` and at ``res + COVER_EXTRA_DEPTH`` (pure column arithmetic).
+    Cell ids encode their resolution, so a disjoint cover_cells cover
+    matches at most one of the two per area."""
+    return F.explode(F.array(
+        C.cell_col(lon, lat, res), C.cell_col(lon, lat, res + COVER_EXTRA_DEPTH)
+    ))
+
+
 def assign_points_to_areas(
     spark,
     points: DataFrame,
@@ -394,7 +503,10 @@ def assign_points_to_areas(
     Overlapping admin levels produce multiple rows per point by design
     (reference evaluates each area independently; SURVEY.md §7.3).
 
-    The exact test stays inside whole-stage codegen — zero Python on the
+    Each point probes the two-level cover with its cell at both levels
+    (:func:`probe_cells_col`) in one broadcast hash join; an area's cells
+    are disjoint, so each (point, area) pair yields at most one candidate.
+    The exact test is a JVM expression — zero Python on the
     fact path (measured: the Arrow/IPC hop caps at a few M rows/s per
     node regardless of cores, so this is the difference between a
     scaling and a non-scaling plan). ``predicate`` is boundary-inclusive
@@ -409,7 +521,7 @@ def assign_points_to_areas(
         res = pick_join_res(areas)
     dim = cover_cells(areas, res, id_col=id_col, wkb_col=wkb_col)
     refine_cols = list(REFINE_COLS)
-    pts = points.withColumn("__cell", C.cell_col(lon, lat, res))
+    pts = points.withColumn("__cell", probe_cells_col(lon, lat, res))
     # internal name for the dim join column — dropping 'cell' by name
     # would also clobber a points payload column called 'cell'
     dim = dim.withColumnRenamed("cell", "__dim_cell")
@@ -418,7 +530,7 @@ def assign_points_to_areas(
     ).drop("__dim_cell", "__cell")
     if not exact:
         return cand.drop(*refine_cols)
-    # predicate reaches the codegen refine too (a silently-ignored
+    # predicate reaches the JVM refine too (a silently-ignored
     # 'contains' here would return boundary points for BOTH areas
     # sharing an edge while the caller asked for strict containment)
     return cand.filter(

@@ -24,11 +24,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..geo import cells as C
 from ..geo import geometry as G
 from ..pinning import pin
 from ..sources.streets import HIGHWAY_WHITELIST
-from .pip_join import cover_cells, pick_join_res
+from .pip_join import (
+    COVER_EXTRA_DEPTH,
+    REFINE_COLS,
+    cover_cells,
+    jvm_refine_expr,
+    pick_join_res,
+    probe_cells_col,
+    seg_cover_cells_cols,
+    seg_crossing_expr,
+)
 
 
 def streets_in_areas(
@@ -48,23 +56,23 @@ def streets_in_areas(
     boundary edge. (If any segment point is inside but endpoint₀ is not,
     the segment must cross the boundary; endpoint₁ needs no separate test.)
 
-    - endpoint₀ branch: cell equi-join on endpoint₀'s cell + the exact
-      point refine (pip_join.jvm_refine_expr) — whole-stage codegen.
+    - endpoint₀ branch: equi-join of endpoint₀'s cell at both cover
+      levels (pip_join.probe_cells_col) + the exact point refine
+      (pip_join.jvm_refine_expr).
     - crossing branch: segment-bbox cover cells (codegen sequence explode)
+      at the cover's finer level, where every boundary row sits,
       equi-join against the area's BOUNDARY cells, then the inclusive
       segment-vs-stored-edges test (pip_join.seg_crossing_expr). Complete
       because any boundary intersection point lies in a cell covered by
       both sides, and that cell's payload stores every edge overlapping it.
+
+    Both refines are JVM expressions with no Python, but their
+    higher-order functions run interpreted outside the whole-stage codegen
+    stage; their cost is bounded by the edges per cover row.
+
     Both dimension sides broadcast; the only shuffle is the final
     per-(osm_id, area_id) dedup over narrow street rows.
     """
-    from .pip_join import (
-        REFINE_COLS,
-        jvm_refine_expr,
-        seg_cover_cells_cols,
-        seg_crossing_expr,
-    )
-
     if res is None:
         res = pick_join_res(areas)
     # pin: the per-polygon Python cover computation feeds TWO broadcast
@@ -73,7 +81,7 @@ def streets_in_areas(
     dim = pin(cover_cells(areas, res))
     refine_cols = list(REFINE_COLS)
 
-    pts = streets.withColumn("__cell", C.cell_col("x0", "y0", res))
+    pts = streets.withColumn("__cell", probe_cells_col("x0", "y0", res))
     dimr = dim.withColumnRenamed("cell", "__dim_cell")
     ep = (
         pts.join(F.broadcast(dimr), pts["__cell"] == dimr["__dim_cell"], "inner")
@@ -82,7 +90,7 @@ def streets_in_areas(
     )
 
     boundary_dim = dim.filter(~F.col("__pj_full"))
-    seg_cells = seg_cover_cells_cols(streets, res)
+    seg_cells = seg_cover_cells_cols(streets, res + COVER_EXTRA_DEPTH)
     cross = (
         seg_cells.join(F.broadcast(boundary_dim), "cell", "inner")
         .filter(seg_crossing_expr("x0", "y0", "x1", "y1"))

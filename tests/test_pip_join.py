@@ -119,9 +119,10 @@ def test_jvm_refine_vertex_collinear_degeneracy(spark):
     polygon vertex (binary-exact with grid-derived coordinates) must still
     classify correctly; the strict crossing test counted zero at the vertex
     and flipped parity. Ground truth: the vectorized python covers kernel."""
-    # res=3 → cell [0,45)×[0,22.5); cover_cells picks ref = cell center
-    # (22.5, 11.25). Diamond vertex at center+(3,3); probes along the exact
-    # ray center→vertex, plus on-edge / on-vertex points.
+    # res=2 → the boundary cell splits into res-3 cells; the diamond's one,
+    # [0,45)×[0,22.5), gets ref = cell center (22.5, 11.25). Diamond vertex
+    # at center+(3,3); probes along the exact ray center→vertex, plus
+    # on-edge / on-vertex points.
     diamond = np.array(
         [[25.5, 14.25], [30.0, 10.0], [35.0, 14.25], [30.0, 19.0], [25.5, 14.25]]
     )
@@ -143,7 +144,7 @@ def test_jvm_refine_vertex_collinear_degeneracy(spark):
     got = set(
         map(
             tuple,
-            PJ.assign_points_to_areas(spark, pts, areas, res=3)
+            PJ.assign_points_to_areas(spark, pts, areas, res=2)
             .select("point_id", "area_id")
             .toPandas()
             .values,
@@ -168,17 +169,22 @@ def test_assign_points_to_areas_is_collect_free():
 
 
 def test_salted_join_same_result(spark, world):
+    """Salted shuffle join == broadcast join on the two-level probe: both
+    cover levels must contribute rows, or the comparison would only see
+    the full cells at the join resolution."""
     pts, areas = world
     res = PJ.pick_join_res(areas)
     dim = PJ.cover_cells(areas, res)
     from housenumbercore_spark.geo import cells as C
 
-    p2 = pts.withColumn("__cell", C.cell_col("lon", "lat", res))
-    salted = PJ.salted_cell_join(p2, dim, n_salt=4).select("point_id", "area_id")
-    plain = p2.join(dim, p2["__cell"] == dim["cell"]).select("point_id", "area_id")
-    a = salted.toPandas().sort_values(["point_id", "area_id"]).reset_index(drop=True)
-    b = plain.toPandas().sort_values(["point_id", "area_id"]).reset_index(drop=True)
+    p2 = pts.withColumn("__cell", PJ.probe_cells_col("lon", "lat", res))
+    cols = ["point_id", "area_id", "__cell"]
+    salted = PJ.salted_cell_join(p2, dim, n_salt=4).select(*cols)
+    plain = p2.join(dim, p2["__cell"] == dim["cell"]).select(*cols)
+    a = salted.toPandas().sort_values(cols).reset_index(drop=True)
+    b = plain.toPandas().sort_values(cols).reset_index(drop=True)
     assert a.equals(b)
+    assert set(C.cell_res(a["__cell"].values)) == {res, res + PJ.COVER_EXTRA_DEPTH}
 
 
 def test_tile_assign_pure_codegen(spark, world):
@@ -266,3 +272,95 @@ def test_refine_bad_predicate_value_error(spark, world):
         PJ.assign_points_to_areas(
             spark, pts, areas, predicate="contians"
         ).collect()
+
+
+def _jagged_ring(rng, n=96):
+    """Star-shaped ring with radial jitter: many short edges per cell, like
+    real admin boundaries."""
+    t = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+    r = 1.8 + 0.25 * rng.uniform(-1.0, 1.0, n)
+    ring = np.column_stack([2.0 + r * np.cos(t), 2.0 + r * np.sin(t)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _cover_edges_ok(cover, rings_by_area, fine):
+    """Every non-full cover row stores exactly the ring edges whose bbox
+    overlaps its cell (padded by the cover's 1e-9 cell-width tolerance)."""
+    from housenumbercore_spark.geo import cells as C
+
+    pad = 360.0 / (1 << fine) * 1e-9
+    for aid, grp in cover[~cover["__pj_full"]].groupby("area_id"):
+        e = np.concatenate([
+            np.column_stack([r[:-1], r[1:]])
+            for r in map(G._close_ring, rings_by_area[aid])
+        ])
+        lo, la, hi, ha = C.cell_bounds(grp.cell.values)
+        for i, edges in enumerate(grp["__pj_edges"]):
+            hit = (
+                (np.maximum(e[:, 0], e[:, 2]) >= lo[i] - pad)
+                & (np.minimum(e[:, 0], e[:, 2]) <= hi[i] + pad)
+                & (np.maximum(e[:, 1], e[:, 3]) >= la[i] - pad)
+                & (np.minimum(e[:, 1], e[:, 3]) <= ha[i] + pad)
+            )
+            assert sorted(map(tuple, edges)) == sorted(map(tuple, e[hit].tolist()))
+
+
+def test_two_level_cover_disjoint_and_exact(spark):
+    """cover_cells is a disjoint two-level cover: rows at the join res are
+    full and edge-free, every boundary row sits one level finer and stores
+    exactly the ring edges whose bbox overlaps its cell, each (point, area)
+    pair meets at most one row, and the refined join equals G.covers."""
+    from housenumbercore_spark.geo import cells as C
+
+    from test_refine_fuzz import POLYGONS, _rings_for, _wkb_for
+
+    rng = np.random.default_rng(13)
+    names = sorted(POLYGONS) + ["multi", "jagged"]
+    jag = _jagged_ring(rng)
+    wkbs = [_wkb_for(nm) for nm in names[:-1]] + [G.polygon_wkb([jag])]
+    rings = [_rings_for(nm) for nm in names[:-1]] + [[jag]]
+    areas = spark.createDataFrame(
+        [(i, bytearray(w)) for i, w in enumerate(wkbs)],
+        "area_id long, polygon binary",
+    )
+    n = 1500
+    xy = rng.uniform(-1.0, 5.0, (2, n))
+    snap = rng.random(n) < 0.5  # grid-snapped half: edge/vertex degeneracies
+    xy[:, snap] = np.round(xy[:, snap] * 4) / 4
+    pts = spark.createDataFrame(
+        [(i, float(xy[0, i]), float(xy[1, i])) for i in range(n)],
+        "point_id long, lon double, lat double",
+    )
+    want = {
+        (i, aid)
+        for aid, w in enumerate(wkbs)
+        for i in np.nonzero(G.covers(G.parse_wkb(w), xy[0], xy[1]))[0]
+    }
+    kinds = set()
+    for res in (6, 8):
+        fine = res + PJ.COVER_EXTRA_DEPTH
+        cover = PJ.cover_cells(areas, res).toPandas()
+        lvl = C.cell_res(cover.cell.values)
+        full = cover["__pj_full"].values
+        kinds |= set(zip(lvl.tolist(), full.tolist()))
+        assert set(lvl) <= {res, fine}
+        assert full[lvl == res].all()
+        assert (cover["__pj_edges"][lvl == res].map(len) == 0).all()
+        assert (lvl[~full] == fine).all()
+        # disjoint: no fine row lies under a join-res row of its own area
+        for _, grp in cover.groupby("area_id"):
+            g = grp.cell.values
+            g_lvl = C.cell_res(g)
+            assert not np.isin(C.parent(g[g_lvl == fine], res), g[g_lvl == res]).any()
+        _cover_edges_ok(cover, rings, fine)
+
+        cand = PJ.assign_points_to_areas(spark, pts, areas, res=res, exact=False)
+        assert cand.groupBy("point_id", "area_id").count().filter("count > 1").count() == 0
+        got = {
+            (r.point_id, r.area_id)
+            for r in PJ.assign_points_to_areas(spark, pts, areas, res=res).collect()
+        }
+        assert got == want, sorted(got ^ want)[:10]
+    # the shapes exercise every row kind: full at both levels (at res 8),
+    # and boundary rows
+    assert {(7, False), (8, True), (9, True), (9, False)} <= kinds

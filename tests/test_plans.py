@@ -62,9 +62,11 @@ def test_filter_pushdown_reaches_parquet(spark):
 
 
 def test_street_catalog_refine_is_jvm_only(spark):
-    """The street-in-polygon refine must be collect-free pure codegen: the
-    only Python allowed in the plan is the dimension-side cover_cells
-    mapInPandas (areas → cover rows), never a per-candidate street refine."""
+    """The street-in-polygon refine must be collect-free and Python-free:
+    the only Python allowed in the plan is the dimension-side cover_cells
+    mapInPandas (areas → cover rows), never a per-candidate street refine.
+    (The refine's higher-order functions run interpreted, outside the
+    whole-stage codegen stage; this test checks for Python, not codegen.)"""
     import inspect
 
     from housenumbercore_spark.operators import street_catalog as SC
