@@ -65,8 +65,10 @@ COVER_MAX_CELLS_PER_AREA = 256
 # Boundary cells of the join resolution are split this many levels finer
 # (cover_cells). Measured on the perfbench assign inputs (seed 1): depth 1
 # cuts the refine's edge checks from 1.74 to 0.61 per candidate (7.4 to
-# 4.1 per boundary candidate); a depth-2 prototype built 3× the cover
-# rows and lost on ingest.
+# 4.1 per boundary candidate); on bench.py's rectangles, whose boundary
+# cells carry about one edge, it still cuts the candidates that run the
+# refine from 21% to 12%. A depth-2 prototype built 3× the cover rows and
+# lost on ingest.
 COVER_EXTRA_DEPTH = 1
 
 
@@ -133,24 +135,21 @@ def _ring_edges(poly) -> np.ndarray:
     return np.concatenate(segs) if segs else np.empty((0, 4))
 
 
-# (points × edges) elements per block of the dense parity test
-_PARITY_BLOCK = 1 << 20
-
-
-def _parity(edges: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Even-odd membership of points by ray casting over ALL ring edges
-    (holes are handled by parity naturally); blocked over the points so
-    memory stays bounded for large rings."""
-    out = np.zeros(len(x), dtype=bool)
-    x0, y0, x1, y1 = (edges[None, :, k] for k in range(4))
-    step = max(1, _PARITY_BLOCK // max(len(edges), 1))
-    for s in range(0, len(x), step):
-        px, py = x[s:s + step, None], y[s:s + step, None]
-        m = (y0 > py) != (y1 > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xi = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-        out[s:s + step] = np.count_nonzero(m & (xi > px), axis=1) % 2 == 1
-    return out
+def _memberships(poly, x: np.ndarray, y: np.ndarray):
+    """(union, even-odd) membership of off-boundary points, from one ray
+    cast per ring (G._points_in_ring). The union of parts is G.covers off
+    the boundary; the even-odd count over all rings is what parity
+    transport in jvm_refine_expr assumes. They agree unless parts overlap."""
+    union = np.zeros(len(x), dtype=bool)
+    parity = np.zeros(len(x), dtype=bool)
+    for p in G.to_polygons(poly):
+        shell, *holes = (G._points_in_ring(x, y, G._close_ring(r)) for r in p.rings)
+        parity ^= shell
+        for h in holes:
+            parity ^= h
+            shell &= ~h
+        union |= shell
+    return union, parity
 
 
 def _seg_point_dist(edges: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -227,7 +226,9 @@ _REF_FRACTIONS = np.array(
 
 def _area_cover(poly, res: int):
     """One area's disjoint two-level cover as row arrays:
-    (cells, full, ref_x, ref_y, ref_inside, edge lists)."""
+    (cells, full, ref_x, ref_y, ref_inside, edge lists), or None when the
+    parts overlap (union and even-odd membership disagree at a tested
+    point), which the parity refine cannot answer exactly."""
     edges = _ring_edges(poly)
     bx = poly.bbox()
     calm, split, _, _ = _split_boundary(
@@ -238,34 +239,45 @@ def _area_cover(poly, res: int):
         C.children(split, COVER_EXTRA_DEPTH), poly, edges, fine
     )
 
-    # a calm cell's centre decides the whole cell: keep it as full if inside
+    # a calm cell's centre decides the whole cell
     calm = np.concatenate([calm, calm_kids])
     lo, la, hi, ha = C.cell_bounds(calm)
     cx, cy = (lo + hi) / 2, (la + ha) / 2
-    inside = _parity(edges, cx, cy)
-    full, cx, cy = calm[inside], cx[inside], cy[inside]
 
     # boundary cells: a reference point strictly inside the cell and
-    # off-boundary, and its membership (parity over ALL ring edges)
+    # off-boundary
     lo, la, hi, ha = C.cell_bounds(bnd)
     w, h = hi - lo, ha - la
     rx = lo[:, None] + _REF_FRACTIONS[None, :, 0] * w[:, None]
     ry = la[:, None] + _REF_FRACTIONS[None, :, 1] * h[:, None]
     near = np.full(rx.shape, np.inf)
     np.minimum.at(near, ci, _seg_point_dist(edges[ei], rx[ci], ry[ci]))
-    pick = np.argmax(near > 1e-9 * np.maximum(w, h)[:, None], axis=1)
+    clear = near > 1e-9 * np.maximum(w, h)[:, None]
     rows = np.arange(len(bnd))
-    rx, ry = rx[rows, pick], ry[rows, pick]
+    pick = np.argmax(clear, axis=1)
     ends = np.cumsum(np.bincount(ci, minlength=len(bnd)))
     edge_lists = [edges[ei[a:b]].tolist() for a, b in zip(np.r_[0, ends[:-1]], ends)]
 
-    n_full = len(full)
+    # membership of the calm centres and the picked reference points; with
+    # more than one ring, of every clear candidate too, which only widens
+    # the overlapping-parts check (one ring cannot overlap itself)
+    multi = sum(len(p.rings) for p in G.to_polygons(poly)) > 1
+    tested = clear.copy() if multi else np.zeros_like(clear)
+    tested[rows, pick] = True
+    union, parity = _memberships(poly, np.r_[cx, rx[tested]], np.r_[cy, ry[tested]])
+    if (union != parity).any():
+        return None
+    inside = union[:len(calm)]
+    cand_inside = np.zeros(rx.shape, dtype=bool)
+    cand_inside[tested] = union[len(calm):]
+    rx, ry, ref_inside = rx[rows, pick], ry[rows, pick], cand_inside[rows, pick]
+    n_full = int(inside.sum())
     return (
-        np.concatenate([full, bnd]),
+        np.concatenate([calm[inside], bnd]),
         np.r_[np.ones(n_full, dtype=bool), np.zeros(len(bnd), dtype=bool)],
-        np.concatenate([cx, rx]),
-        np.concatenate([cy, ry]),
-        np.r_[np.ones(n_full, dtype=bool), _parity(edges, rx, ry)],
+        np.concatenate([cx[inside], rx]),
+        np.concatenate([cy[inside], ry]),
+        np.r_[np.ones(n_full, dtype=bool), ref_inside],
         [[]] * n_full + edge_lists,
     )
 
@@ -299,7 +311,18 @@ def cover_cells(
     "Touches" is the padded boundary set (_boundary_cells) narrowed to
     cells that some edge bbox overlaps. The cells of one area are
     disjoint, so a point matches at most one of its rows; every covered
-    point sits in an emitted cell (superset guarantee).
+    point sits in an emitted cell (superset guarantee). A join against
+    this cover must key each point on BOTH levels (probe_cells_col): a
+    point keyed at ``res`` alone never meets a boundary row. ``res`` is
+    therefore at most ``C.MAX_RES - COVER_EXTRA_DEPTH``.
+
+    The parts of a multipolygon must not overlap (OGC validity; admin
+    relation parts do not): the refine counts crossings over all rings,
+    so a duplicated or overlapping part would cancel itself out. An area
+    whose union and even-odd memberships disagree at a calm-cell centre or
+    a reference-point candidate fails with a ValueError naming it; an
+    overlap that holds none of these points goes unseen, and its points
+    get the even-odd answer.
 
     A boundary row stores the ring edges whose bbox overlaps the cell,
     a reference point inside the cell that is provably off-boundary, and
@@ -311,9 +334,15 @@ def cover_cells(
     edges (see COVER_EXTRA_DEPTH).
 
     Scale note: the dim explodes to ≈ cover_cells × (1 + edges/cell) narrow
-    rows; for dims too large to broadcast, use salted_cell_join and the
-    same refine expression.
+    rows; for dims too large to broadcast, use salted_cell_join on points
+    keyed with probe_cells_col and the same refine expression.
     """
+    if not 0 <= res <= C.MAX_RES - COVER_EXTRA_DEPTH:
+        raise ValueError(
+            f"cover_cells: res must be in [0, {C.MAX_RES - COVER_EXTRA_DEPTH}] "
+            f"(boundary cells are split to res + {COVER_EXTRA_DEPTH} ≤ "
+            f"MAX_RES={C.MAX_RES}), got {res}"
+        )
     out_schema = T.StructType(
         [
             T.StructField("cell", T.LongType(), False),
@@ -352,7 +381,14 @@ def cover_cells(
                         f"{wkb_col} ({type(exc).__name__}: {exc}) — the "
                         "polygon dimension must carry valid areal WKB"
                     ) from exc
-                part = pd.DataFrame(dict(zip(cols, _area_cover(poly, res))))
+                rows = _area_cover(poly, res)
+                if rows is None:
+                    raise ValueError(
+                        f"cover_cells: {id_col}={aid!r} has overlapping or "
+                        f"duplicated parts in {wkb_col} — dissolve them: the "
+                        "exact refine needs interior-disjoint parts"
+                    )
+                part = pd.DataFrame(dict(zip(cols, rows)))
                 part.insert(1, id_col, aid)
                 parts.append(part)
             if parts:
@@ -551,6 +587,10 @@ def salted_cell_join(
     spreads over ``n_salt`` reducers. AQE skew-join handles residual skew.
     ``how='left'`` keeps every fact row (null-extended when its cell, or
     its NULL key, matches nothing), as the kNN ladder's rounds need.
+
+    Against a cover_cells dim, key the points with probe_cells_col (one
+    row per cover level): keyed at the join res alone, they meet only the
+    full rows and lose every boundary point.
     """
     # the salt must be DETERMINISTIC per row: monotonically_increasing_id
     # depends on partition layout and row order, so a task retry or

@@ -309,7 +309,8 @@ def test_two_level_cover_disjoint_and_exact(spark):
     """cover_cells is a disjoint two-level cover: rows at the join res are
     full and edge-free, every boundary row sits one level finer and stores
     exactly the ring edges whose bbox overlaps its cell, each (point, area)
-    pair meets at most one row, and the refined join equals G.covers."""
+    pair meets at most one row, and the refined join equals G.covers;
+    overlapping parts and a res past MAX_RES - COVER_EXTRA_DEPTH raise."""
     from housenumbercore_spark.geo import cells as C
 
     from test_refine_fuzz import POLYGONS, _rings_for, _wkb_for
@@ -364,3 +365,19 @@ def test_two_level_cover_disjoint_and_exact(spark):
     # the shapes exercise every row kind: full at both levels (at res 8),
     # and boundary rows
     assert {(7, False), (8, True), (9, True), (9, False)} <= kinds
+
+    # parts the parity refine cannot answer fail loudly, with the area
+    # named: a duplicated part (a relation listing one member twice) and a
+    # partial overlap
+    sq = np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]])
+    for aid, parts in ((7, [[sq], [sq]]), (8, [[sq], [sq + 1.0]])):
+        bad = spark.createDataFrame(
+            [(aid, bytearray(G.multipolygon_wkb(parts)))],
+            "area_id long, polygon binary",
+        )
+        for res in (6, 8):
+            with pytest.raises(Exception, match=f"area_id={aid} has overlapping"):
+                PJ.cover_cells(bad, res).collect()
+    # the boundary level must stay within the grid
+    with pytest.raises(ValueError, match="res must be in"):
+        PJ.cover_cells(areas, C.MAX_RES)
