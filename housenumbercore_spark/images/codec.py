@@ -19,7 +19,11 @@ decoded-pixel PSNR ≥ 40 dB invariant):
 
 phash is a from-scratch 64-bit DCT perceptual hash (32×32 grayscale →
 DCT-II → top-left 8×8 minus DC → median threshold), the standard published
-scheme; deterministic and pure numpy.
+scheme; deterministic and pure numpy. A coefficient whose exact value is 0
+computes to round-off that differs between BLAS kernels, so before the
+threshold every coefficient within the transform's float64 error bound
+(``PHASH_ZERO_TOL``) is set to 0: the hash depends on the image, not on the
+host's kernel.
 """
 
 from __future__ import annotations
@@ -378,6 +382,25 @@ def _dct_matrix(n: int) -> np.ndarray:
 
 _DCT32 = _dct_matrix(32)
 
+# Round-off bound of the hash's DCT for 8-bit input. Every float64 product
+# below obeys |fl(A·B) - A·B| <= γ_n·|A|·|B| with γ_n = n·u/(1 - n·u), in
+# any summation order (so for every BLAS kernel). The hash takes a 3-term
+# gray dot product, then C·G·Cᵀ with two inner dimensions of 32; each row
+# of the orthonormal C has unit 2-norm, so Σ|C_ki| <= √32, and 0 <= G <= 255:
+#     |d̂_kl - d_kl| <= (γ_3 + 2·γ_32 + γ_32² + 8u) · 255 · 32  ≈ 6.8e-11,
+# where 8u covers the rounding of C's own entries. A coefficient inside the
+# bound cannot be told from 0 (an additively separable image has exact zeros
+# off row 0 and column 0), and its sign is whatever the kernel's round-off
+# leaves, so phash64 thresholds it as 0.
+_U = np.finfo(np.float64).eps / 2
+
+
+def _gamma(n: int) -> float:
+    return n * _U / (1 - n * _U)
+
+
+PHASH_ZERO_TOL = (_gamma(3) + 2 * _gamma(32) + _gamma(32) ** 2 + 8 * _U) * 255.0 * 32
+
 
 def _resize_gray_32(gray: np.ndarray) -> np.ndarray:
     """Nearest-index resample to 32×32 (deterministic, no interpolation libs)."""
@@ -388,12 +411,15 @@ def _resize_gray_32(gray: np.ndarray) -> np.ndarray:
 
 
 def phash64(pixels: np.ndarray) -> int:
-    """64-bit DCT perceptual hash (signed int64 for Spark LongType)."""
+    """64-bit DCT perceptual hash (signed int64 for Spark LongType) of 8-bit
+    pixels. Coefficients within :data:`PHASH_ZERO_TOL` of 0 count as 0, so
+    the hash is the same under every BLAS kernel."""
     px = np.asarray(pixels, dtype=np.float64)
     gray = px @ np.array([0.299, 0.587, 0.114]) if px.ndim == 3 else px
     g32 = _resize_gray_32(gray)
     d = _DCT32 @ g32 @ _DCT32.T
     block = d[:8, :8].flatten()[1:]  # drop DC
+    block[np.abs(block) <= PHASH_ZERO_TOL] = 0.0
     med = np.median(block)
     bits = block > med
     val = 0

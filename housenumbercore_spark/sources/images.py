@@ -5,11 +5,12 @@ caption string, phash int64 [, lon double, lat double]).
 
 Generation is fully distributed (``spark.range`` → ``mapInPandas``) and
 deterministic per image_id — no driver-side loops, no external data. Pixel
-content is a structured pattern (two sinusoidal gratings + gradient) keyed by
-the id, so phash varies smoothly and collisions are rare. lon/lat derive from
-the integer id with the same hot-cluster skew as the synthetic points
-(sources/synthetic.py), so the image table exercises the identical
-spatial-join path at the 10¹²-row target shape.
+content is two oblique sinusoidal gratings per channel, with direction,
+frequency and phase drawn from ``default_rng(id)``; the grey image is not a
+sum f(x) + g(y), so every phash bit carries signal and collisions are rare.
+lon/lat derive from the integer id with the same hot-cluster skew as the
+synthetic points (sources/synthetic.py), so the image table exercises the
+identical spatial-join path at the 10¹²-row target shape.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ _IMAGES_TABLE_LOCK = threading.Lock()
 # BUMP whenever make_pixels/make_caption/_row_for or the codecs change:
 # the /tmp table cache is keyed on this, and serving a stale generation
 # would silently poison every image correctness check.
-IMAGES_TABLE_VERSION = 2
+IMAGES_TABLE_VERSION = 3
 
 SCHEMA = T.StructType(
     [
@@ -51,15 +52,23 @@ SCHEMA = T.StructType(
 
 
 def make_pixels(i: int) -> np.ndarray:
-    """Deterministic (h, w, 3) uint8 pattern for integer id ``i``."""
+    """Deterministic (h, w, 3) uint8 pattern for integer id ``i``.
+
+    Each channel is the sum of two oblique sinusoidal gratings
+    sin(f·(x·cos θ + y·sin θ) + φ) whose direction θ, frequency f and phase
+    φ are drawn from ``default_rng(i)``. An oblique grating is not a sum
+    f(x) + g(y), so the grey image's DCT carries signal in every
+    coefficient of the phash block, not only in row 0 and column 0.
+    Frequencies span half a cycle to two cycles across the image, inside
+    the band the 8×8 phash block sees, so the pattern stays smooth."""
+    rng = np.random.default_rng(i)
+    theta = rng.uniform(0.0, np.pi, (3, 2, 1, 1))
+    freq = rng.uniform(np.pi / IMG_W, 4 * np.pi / IMG_W, (3, 2, 1, 1))
+    phase = rng.uniform(0.0, 2 * np.pi, (3, 2, 1, 1))
     y, x = np.mgrid[0:IMG_H, 0:IMG_W].astype(np.float64)
-    fx = 0.3 + (i % 7) * 0.13
-    fy = 0.2 + (i % 11) * 0.09
-    phase = (i % 97) * 0.21
-    r = 127.5 + 127.5 * np.sin(fx * x + phase)
-    g = 127.5 + 127.5 * np.cos(fy * y - phase)
-    b = (x * 255 / max(IMG_W - 1, 1) + i % 29) % 256
-    return np.clip(np.stack([r, g, b], axis=-1), 0, 255).astype(np.uint8)
+    waves = np.sin(freq * (x * np.cos(theta) + y * np.sin(theta)) + phase)
+    rgb = 127.5 + 63.75 * waves.sum(axis=1)  # (3, h, w), each in [0, 255]
+    return np.clip(np.moveaxis(rgb, 0, -1), 0, 255).astype(np.uint8)
 
 
 CAPTION_SUBJECTS = ["house", "street", "square", "bridge", "tower", "garden"]

@@ -100,10 +100,48 @@ class TestCodec:
         b = codec.phash64(IMG.make_pixels(2))
         assert a == a2
         assert hamming64(a, b) > 4
-        # lossy re-encode moves the hash only mildly (tiny 16x16 images put
-        # many DCT coefficients near the median, so a handful of bits flip)
+        # lossy re-encode moves the hash only mildly (a handful of bits
+        # flip). An additively separable image f(x) + g(y) would leave every
+        # coefficient off row 0 and column 0 exactly 0, and those bits would
+        # threshold round-off instead of signal.
         lossy = codec.decode_jpgq(codec.encode_jpgq(IMG.make_pixels(1)))
         assert hamming64(a, codec.phash64(lossy)) <= 16
+
+    def test_phash_same_under_every_blas_kernel(self):
+        """The stored phash is a function of the image alone: the phash of
+        every id in 0-1999, and of a solid image, is the same in child
+        processes pinned to different OpenBLAS kernels, and the 2000 ids
+        have 2000 distinct phashes. ``OPENBLAS_CORETYPE`` selects the
+        kernel only on an OpenBLAS built with a dynamic architecture; on
+        any other BLAS the children all run the same kernel and this test
+        checks same-host determinism only."""
+        import json
+        import os
+        import subprocess
+        import sys
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        child = (
+            "import json, numpy as np\n"
+            "from housenumbercore_spark.images import codec\n"
+            "from housenumbercore_spark.sources import images as IMG\n"
+            "print(json.dumps([[IMG.phash_for(i) for i in range(2000)],\n"
+            "    codec.phash64(np.full((16, 16, 3), 128, np.uint8))]))\n"
+        )
+        results = {}
+        for core in ("Haswell", "SkylakeX", "Sandybridge"):
+            env = dict(os.environ, OPENBLAS_CORETYPE=core)
+            out = subprocess.run(  # `python -c` imports from its cwd first
+                [sys.executable, "-c", child], env=env, cwd=root,
+                capture_output=True, text=True, check=True, timeout=300,
+            )
+            results[core] = json.loads(out.stdout)
+        ref = results["Haswell"]
+        for core, got in results.items():
+            differ = [i for i in range(2000) if got[0][i] != ref[0][i]]
+            assert not differ, (core, len(differ), differ[:5])
+            assert got[1] == ref[1], core
+        assert len(set(ref[0])) == 2000
 
     def test_decode_dispatch_rejects_garbage(self):
         with pytest.raises(ValueError):

@@ -74,7 +74,9 @@ def main() -> int:
     ap.add_argument("--only", default="")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script lives in, so the driver imports the same
+    # package as the Spark workers started from it
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
 
