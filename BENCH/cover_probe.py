@@ -6,8 +6,8 @@ of ``--seed`` (400k points, 30 jagged admin rings; the default), the
 perfbench ``ingest`` image rows of ``--seed`` (8k, same rings), or the
 ``flagship`` inputs of bench.py at ``--sf`` (synthetic points against 30
 rectangles, without bench.py's 64× replication). Stages them under a
-temporary directory, builds the two-level cover once and pins it, then
-prints one JSON line with
+temporary directory, builds the two-level cover once (``area_cover``
+keeps it persisted for the areas frame), then prints one JSON line with
 
 - ``cover_rows``: cover rows per cell resolution, split into full
   (interior, no edges) and boundary rows;
@@ -17,8 +17,8 @@ prints one JSON line with
   ``edges_per_boundary_candidate``;
 - ``join_s`` / ``join_norefine_s``: median wall time of ``--calls`` warm
   ``assign_points_to_areas`` calls with ``exact=True`` and
-  ``exact=False`` on the pinned cover, interleaved (noop sink, cached
-  points), so their difference is the refine's cost.
+  ``exact=False`` on that cover, interleaved (noop sink, cached points),
+  so their difference is the refine's cost.
 
 Run from the repository root (same session shape as perfbench/run.py,
 ``local[min(3, nproc-1)]`` with a 1 GB heap):
@@ -36,7 +36,6 @@ import statistics
 import sys
 import tempfile
 import time
-from unittest import mock
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -90,8 +89,7 @@ def main(argv=None) -> int:
             pts, areas = load_inputs(spark, args.inputs, args.seed, args.sf, run_dir)
             pts = pts.cache()
             pts.count()
-            res = PJ.pick_join_res(areas)
-            cover = PJ.cover_cells(areas, res).cache()
+            res, cover = PJ.area_cover(areas)
 
             rows = cover.select("cell", "__pj_full").toPandas()
             kind = rows["__pj_full"].map({True: "full", False: "boundary"})
@@ -108,17 +106,16 @@ def main(argv=None) -> int:
             n_cand = sum(hist.values())
             n_bnd = n_cand - hist.get(0, 0)
 
-            # every call below joins against the pinned cover
-            with mock.patch.object(PJ, "cover_cells", return_value=cover):
-                def call(exact: bool) -> float:
-                    return timed_sink(PJ.assign_points_to_areas(
-                        spark, pts, areas, res=res, exact=exact))
+            # every call below joins against the cover built above
+            def call(exact: bool) -> float:
+                return timed_sink(PJ.assign_points_to_areas(
+                    spark, pts, areas, exact=exact))
 
-                call(True), call(False)  # warm-up
-                t_on, t_off = [], []
-                for _ in range(args.calls):
-                    t_on.append(call(True))
-                    t_off.append(call(False))
+            call(True), call(False)  # warm-up
+            t_on, t_off = [], []
+            for _ in range(args.calls):
+                t_on.append(call(True))
+                t_off.append(call(False))
         finally:
             stop_session(spark)
 

@@ -358,16 +358,26 @@ def union_as_multipolygon(wkbs: list[bytes]) -> bytes:
     The reference's iterative ST_Union over relation members
     (MunicipalityArea.java:517-537) combines *disjoint* boundary parts of one
     admin relation; set-union of disjoint parts is exactly multipolygon
-    collection, which is what this returns. (True overlapping-polygon
-    dissolve is out of scope — admin relation parts do not overlap.)
+    collection, which is what this returns. A part listed twice (the same
+    rings, byte for byte once closed) is kept once, so a relation that
+    repeats a member covers and joins like one that lists it once. (True
+    overlapping-polygon dissolve is out of scope — admin relation parts do
+    not overlap; the point-in-polygon cover rejects them by name.)
     """
     polys: list[list[np.ndarray]] = []
+    seen: set[tuple[bytes, ...]] = set()
     for b in wkbs:
         g = parse_wkb(b)
         if isinstance(g, Polygon):
-            polys.append(g.rings)
+            parts = [g.rings]
         elif isinstance(g, MultiPolygon):
-            polys.extend(p.rings for p in g.polygons)
+            parts = [p.rings for p in g.polygons]
         else:
             raise TypeError("union_as_multipolygon expects areal WKB")
+        for rings in parts:
+            rings = [_close_ring(r) for r in rings]
+            key = tuple(r.tobytes() for r in rings)
+            if key not in seen:
+                seen.add(key)
+                polys.append(rings)
     return multipolygon_wkb(polys)

@@ -10,7 +10,9 @@ set-based plan over all areas at once:
    (:func:`cover_cells`): interior cells at the join resolution, boundary
    cells split one level finer. Distributed ``mapInPandas`` over the
    dimension; output is the narrow ``(cell, area_id, refine payload)``
-   build side.
+   build side. :func:`area_cover` builds it once per areas frame and
+   keeps it persisted with its lineage, so every later join against the
+   same dimension frame skips the Python cover job.
 2. **Encode** every point's cell at both levels as pure column arithmetic
    (whole-stage codegen — zero Python on the fact path), exploded into one
    probe row per level.
@@ -40,11 +42,15 @@ missed; the refine is exact.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from ..geo import cells as C
 from ..geo import geometry as G
@@ -76,7 +82,8 @@ def pick_join_res(areas: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax"),
                   max_cells: int = COVER_MAX_CELLS_PER_AREA, finest: int = 13) -> int:
     """One fixed join resolution for the whole dim: the finest res whose
     cover of the *median-sized* area stays under ``max_cells``. Single tiny
-    aggregate on the dimension — not the fact table."""
+    aggregate job on the dimension — not the fact table; the joins take it
+    from :func:`area_cover`, which runs it once per areas frame."""
     xmin, ymin, xmax, ymax = bbox_cols
     row = areas.select(
         F.expr(f"percentile({xmax} - {xmin}, 0.5)").alias("w"),
@@ -397,6 +404,69 @@ def cover_cells(
     return areas.select(id_col, wkb_col).mapInPandas(gen, out_schema)
 
 
+# areas frame → {"res": pick_join_res, (res, id_col, wkb_col): cover}
+_COVERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_COVERS_LOCK = threading.Lock()
+
+
+def _unpersist_covers(memo: dict) -> None:
+    # runs when the areas frame dies; a stopped context cannot unpersist
+    for key, cover in memo.items():
+        if key != "res":
+            try:
+                cover.unpersist()
+            except Exception:  # noqa: BLE001 — stopped context
+                pass
+
+
+def area_cover(
+    areas: DataFrame,
+    res: int | None = None,
+    id_col: str = "area_id",
+    wkb_col: str = "polygon",
+) -> tuple[int, DataFrame]:
+    """``(res, cover)`` for joins against ``areas``, built once per areas
+    frame: ``res`` defaults to :func:`pick_join_res` and ``cover`` is
+    :func:`cover_cells` at that res, both memoized per frame.
+
+    The cover is ``persist(MEMORY_AND_DISK)``-ed with no eager job: the
+    first query that joins against it fills the cache (adaptive execution
+    runs that as its own cache stage, one job more than an uncached
+    cover), and every later join against the same frame reads it instead
+    of running the Python cover job again. This is not a pin site (pinning.py): the memo outlives a
+    query, so it keeps its lineage whatever the pin strategy — a lost
+    block is recomputed, where a truncated ``localCheckpoint`` would fail
+    every later call on the same handle. After a
+    ``spark.catalog.clearCache()`` the cover is persisted again on the
+    next lookup; when ``areas`` is garbage-collected, its covers are
+    unpersisted.
+
+    The memo is keyed by frame identity, not by plan: a new
+    ``spark.read.parquet(path)`` frame builds its own cover. (Spark's
+    cache keeps one entry for covers with the same plan, so releasing one
+    such frame unpersists the other's cover too; that one is persisted
+    again on its next lookup.) As with ``DataFrame.cache``, the memo
+    assumes that a frame's rows do not change between actions.
+    """
+    with _COVERS_LOCK:
+        memo = _COVERS.get(areas)
+        if memo is None:
+            memo = _COVERS[areas] = {}
+            weakref.finalize(areas, _unpersist_covers, memo).atexit = False
+        if res is None:
+            if "res" not in memo:
+                memo["res"] = pick_join_res(areas)
+            res = memo["res"]
+        key = (res, id_col, wkb_col)
+        cover = memo.get(key)
+        if cover is None:
+            cover = memo[key] = cover_cells(areas, res, id_col=id_col, wkb_col=wkb_col)
+        level = cover.storageLevel
+        if not (level.useMemory or level.useDisk):
+            cover.persist(StorageLevel.MEMORY_AND_DISK)
+        return res, cover
+
+
 def jvm_refine_expr(
     lon: str = "lon", lat: str = "lat", predicate: str = "covers"
 ) -> F.Column:
@@ -539,7 +609,8 @@ def assign_points_to_areas(
     Overlapping admin levels produce multiple rows per point by design
     (reference evaluates each area independently; SURVEY.md §7.3).
 
-    Each point probes the two-level cover with its cell at both levels
+    Each point probes the two-level cover of :func:`area_cover` (built
+    once per areas frame) with its cell at both levels
     (:func:`probe_cells_col`) in one broadcast hash join; an area's cells
     are disjoint, so each (point, area) pair yields at most one candidate.
     The exact test is a JVM expression — zero Python on the
@@ -553,9 +624,7 @@ def assign_points_to_areas(
     frames); the parameter stays for signature uniformity with the
     session-bound operators every caller already threads a session to.
     """
-    if res is None:
-        res = pick_join_res(areas)
-    dim = cover_cells(areas, res, id_col=id_col, wkb_col=wkb_col)
+    res, dim = area_cover(areas, res, id_col=id_col, wkb_col=wkb_col)
     refine_cols = list(REFINE_COLS)
     pts = points.withColumn("__cell", probe_cells_col(lon, lat, res))
     # internal name for the dim join column — dropping 'cell' by name

@@ -25,14 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import geometry as G
-from ..pinning import pin
 from ..sources.streets import HIGHWAY_WHITELIST
 from .pip_join import (
     COVER_EXTRA_DEPTH,
     REFINE_COLS,
-    cover_cells,
+    area_cover,
     jvm_refine_expr,
-    pick_join_res,
     probe_cells_col,
     seg_cover_cells_cols,
     seg_crossing_expr,
@@ -61,43 +59,40 @@ def streets_in_areas(
       (pip_join.jvm_refine_expr).
     - crossing branch: segment-bbox cover cells (codegen sequence explode)
       at the cover's finer level, where every boundary row sits,
-      equi-join against the area's BOUNDARY cells, then the inclusive
+      equi-join against the area's cells, then the inclusive
       segment-vs-stored-edges test (pip_join.seg_crossing_expr). Complete
       because any boundary intersection point lies in a cell covered by
       both sides, and that cell's payload stores every edge overlapping it.
 
-    Both refines are JVM expressions with no Python, but their
-    higher-order functions run interpreted outside the whole-stage codegen
-    stage; their cost is bounded by the edges per cover row.
-
-    Both dimension sides broadcast; the only shuffle is the final
-    per-(osm_id, area_id) dedup over narrow street rows.
+    Both branches' probe rows are unioned and meet the cover (from
+    pip_join.area_cover) in ONE broadcast join; a ``__pj_seg`` flag picks
+    each row's refine. Both refines are JVM expressions with no Python,
+    but their higher-order functions run interpreted outside the
+    whole-stage codegen stage; their cost is bounded by the edges per
+    cover row. The only shuffle is the final per-(osm_id, area_id) dedup
+    over narrow street rows.
     """
-    if res is None:
-        res = pick_join_res(areas)
-    # pin: the per-polygon Python cover computation feeds TWO broadcast
-    # builds (endpoint join + boundary-only crossing join); without pinning
-    # it would execute twice per call. Mechanism per pinning.py.
-    dim = pin(cover_cells(areas, res))
-    refine_cols = list(REFINE_COLS)
+    # both branches probe ONE broadcast of the cover, so its Python job runs
+    # at most once per query even when the areas frame (and with it the
+    # area_cover memo) is gone before the query runs
+    res, dim = area_cover(areas, res)
+    dim = dim.withColumnRenamed("cell", "__dim_cell")
 
-    pts = streets.withColumn("__cell", probe_cells_col("x0", "y0", res))
-    dimr = dim.withColumnRenamed("cell", "__dim_cell")
-    ep = (
-        pts.join(F.broadcast(dimr), pts["__cell"] == dimr["__dim_cell"], "inner")
-        .filter(jvm_refine_expr("x0", "y0"))
-        .drop("__dim_cell", "__cell", *refine_cols)
+    ep = (streets.withColumn("__cell", probe_cells_col("x0", "y0", res))
+          .withColumn("__pj_seg", F.lit(False)))
+    seg = (seg_cover_cells_cols(streets, res + COVER_EXTRA_DEPTH, out="__cell")
+           .withColumn("__pj_seg", F.lit(True)))
+    # a segment cell meets full rows too; their empty edge list fails the
+    # crossing test
+    hit = (F.when(F.col("__pj_seg"), seg_crossing_expr("x0", "y0", "x1", "y1"))
+           .otherwise(jvm_refine_expr("x0", "y0")))
+    return (
+        ep.unionByName(seg)
+        .join(F.broadcast(dim), F.col("__cell") == dim["__dim_cell"], "inner")
+        .filter(hit)
+        .drop("__dim_cell", "__cell", "__pj_seg", *REFINE_COLS)
+        .dropDuplicates(["osm_id", "area_id"])
     )
-
-    boundary_dim = dim.filter(~F.col("__pj_full"))
-    seg_cells = seg_cover_cells_cols(streets, res + COVER_EXTRA_DEPTH)
-    cross = (
-        seg_cells.join(F.broadcast(boundary_dim), "cell", "inner")
-        .filter(seg_crossing_expr("x0", "y0", "x1", "y1"))
-        .drop("cell", *refine_cols)
-    )
-
-    return ep.unionByName(cross).dropDuplicates(["osm_id", "area_id"])
 
 
 def apply_whitelist(streets: DataFrame, highway_col: str = "highway") -> DataFrame:

@@ -1,7 +1,7 @@
 """Materialization-pinning seam: one place to choose HOW a multi-consumer
 frame is pinned.
 
-Sixteen hot paths in this engine materialize an intermediate frame once so
+The engine's hot paths materialize an intermediate frame once so
 that N downstream consumers (different-keyed joins, both sides of a
 self-join, iterative rounds) do not each re-execute its lineage — without a
 pin the dominant corpus/payload scan runs once per consumer (measured 2-6×
@@ -46,7 +46,9 @@ Operational contracts under the non-default strategies:
   Spark has no refcount GC for cached plans. A long-lived session running
   many pipeline invocations should ``spark.catalog.clearCache()`` between
   them (bench.py does); engine-internal memoizations self-heal after a
-  clearCache (see pipelines.evaluation_matched), and loop-scoped pins are
+  clearCache (see pipelines.evaluation_matched and pip_join.area_cover,
+  which is not a pin site: it persists whatever the strategy, so its
+  lineage outlives a query), and loop-scoped pins are
   released in-function with :func:`unpin`.
 - ``reliable``: checkpoint files are cleaned by the ContextCleaner only
   when ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (the

@@ -1,6 +1,6 @@
 """Pin-strategy seam (housenumbercore_spark/pinning.py).
 
-The 18 hot-path pin sites all route through pin(); these tests prove the
+Every hot-path pin site routes through pin(); these tests prove the
 three mechanisms are interchangeable for correctness and that the
 truncation contract (source deleted after pinning) holds under every
 strategy that claims it.

@@ -162,10 +162,13 @@ def test_jvm_refine_vertex_collinear_degeneracy(spark):
 def test_assign_points_to_areas_is_collect_free():
     """Polygons must never be collected to the driver: the refine payload
     rides the broadcast cover join (the JVM refine itself is checked
-    against the numpy kernels in test_refine_fuzz.py)."""
+    against the numpy kernels in test_refine_fuzz.py), and the memoized
+    cover it takes from area_cover stays a lazy, executor-side frame."""
     import inspect
 
-    assert ".collect()" not in inspect.getsource(PJ.assign_points_to_areas)
+    for fn in (PJ.assign_points_to_areas, PJ.area_cover):
+        src = inspect.getsource(fn)
+        assert ".collect()" not in src and "toPandas" not in src, fn.__name__
 
 
 def test_salted_join_same_result(spark, world):
@@ -381,3 +384,160 @@ def test_two_level_cover_disjoint_and_exact(spark):
     # the boundary level must stay within the grid
     with pytest.raises(ValueError, match="res must be in"):
         PJ.cover_cells(areas, C.MAX_RES)
+
+
+def _sorted_rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.fixture
+def build_counts(monkeypatch):
+    """Counts the cover_cells and pick_join_res calls made through the
+    module (area_cover looks both up there)."""
+    counts = {"cover_cells": 0, "pick_join_res": 0}
+    for name in counts:
+        orig = getattr(PJ, name)
+
+        def counted(*a, _orig=orig, _name=name, **k):
+            counts[_name] += 1
+            return _orig(*a, **k)
+
+        monkeypatch.setattr(PJ, name, counted)
+    return counts
+
+
+def test_area_cover_built_once_per_areas_frame(spark, world, build_counts):
+    """Repeat joins against one areas frame — two point assigns and a
+    street join — build its res and cover once; a second frame over the
+    same rows builds its own, and an explicit res gets its own entry."""
+    from housenumbercore_spark.operators import street_catalog as SC
+    from housenumbercore_spark.sources import streets as STS
+
+    pts, _ = world
+    streets = SC.apply_whitelist(STS.street_segments_df(spark, SF))
+    areas = S.areas_df(spark, SF)
+    first = _sorted_rows(PJ.assign_points_to_areas(spark, pts, areas),
+                         ["point_id", "area_id"])
+    again = _sorted_rows(PJ.assign_points_to_areas(spark, pts, areas),
+                         ["point_id", "area_id"])
+    in_areas = SC.streets_in_areas(spark, streets, areas).count()
+    assert first == again and in_areas > 0
+    assert build_counts == {"cover_cells": 1, "pick_join_res": 1}
+
+    res, cover = PJ.area_cover(areas)
+    assert PJ.area_cover(areas) == (res, cover)
+    assert cover.storageLevel.useMemory  # persisted, lineage kept
+    assert build_counts == {"cover_cells": 1, "pick_join_res": 1}
+
+    other = S.areas_df(spark, SF)
+    assert _sorted_rows(PJ.assign_points_to_areas(spark, pts, other),
+                        ["point_id", "area_id"]) == first
+    assert build_counts == {"cover_cells": 2, "pick_join_res": 2}
+    assert PJ.area_cover(areas, res=res - 1)[1] is not cover
+    assert build_counts == {"cover_cells": 3, "pick_join_res": 2}
+
+
+def test_area_cover_released_with_its_frame(spark, world):
+    """When the areas frame is collected, its memo entry goes and its
+    persisted cover is unpersisted."""
+    import gc
+    import weakref
+
+    pts, _ = world
+    jsc = spark.sparkContext._jsc
+    gc.collect()
+    n_memo, n_rdds = len(PJ._COVERS), len(jsc.getPersistentRDDs())
+    areas = S.areas_df(spark, SF)
+    assert PJ.assign_points_to_areas(spark, pts, areas).count() > 0
+    assert len(PJ._COVERS) == n_memo + 1
+    assert len(jsc.getPersistentRDDs()) == n_rdds + 1
+    ref = weakref.ref(areas)
+    del areas
+    gc.collect()
+    assert ref() is None
+    assert len(PJ._COVERS) == n_memo
+    assert len(jsc.getPersistentRDDs()) == n_rdds
+
+
+def test_area_cover_survives_clear_cache(spark, world):
+    """A clearCache between calls unpersists the memoized cover; the next
+    call persists it again and returns the same rows."""
+    pts, _ = world
+    areas = S.areas_df(spark, SF)
+    first = _sorted_rows(PJ.assign_points_to_areas(spark, pts, areas),
+                         ["point_id", "area_id"])
+    cover = PJ.area_cover(areas)[1]
+    spark.catalog.clearCache()
+    assert not cover.storageLevel.useMemory
+    assert _sorted_rows(PJ.assign_points_to_areas(spark, pts, areas),
+                        ["point_id", "area_id"]) == first
+    assert PJ.area_cover(areas)[1] is cover
+    assert cover.storageLevel.useMemory
+
+
+def test_area_cover_bad_geometry_raises_on_every_call(spark, world):
+    """The lazily persisted cover of a broken dimension never caches a
+    result: each call fails with the area named."""
+    pts, _ = world
+    sq = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (0.0, 0.0)]
+    areas = spark.createDataFrame(
+        [(1, G.polygon_wkb([sq]), 0.0, 0.0, 1.0, 1.0),
+         (2, None, 0.0, 0.0, 1.0, 1.0)],
+        "area_id int, polygon binary, xmin double, ymin double, "
+        "xmax double, ymax double",
+    )
+    for _ in range(2):
+        with pytest.raises(Exception, match="area_id=2"):
+            PJ.assign_points_to_areas(spark, pts, areas).collect()
+
+
+def test_area_cover_rows_identical_under_every_pin_strategy(spark, world):
+    """area_cover is not a pin site: assign and street rows are the same
+    under the local, persist and reliable strategies, cold and warm."""
+    from conftest import forced_pin_strategy
+
+    from housenumbercore_spark.operators import street_catalog as SC
+    from housenumbercore_spark.sources import streets as STS
+
+    pts, _ = world
+    streets = SC.apply_whitelist(STS.street_segments_df(spark, SF))
+    seen = set()
+    for strategy in ("local", "persist", "reliable"):
+        with forced_pin_strategy(spark, strategy):
+            areas = S.areas_df(spark, SF)
+            for _ in range(2):
+                seen.add((
+                    tuple(_sorted_rows(PJ.assign_points_to_areas(spark, pts, areas),
+                                       ["point_id", "area_id"])),
+                    tuple(_sorted_rows(SC.streets_in_areas(spark, streets, areas),
+                                       ["osm_id", "area_id"])),
+                ))
+    assert len(seen) == 1
+
+
+def test_union_drops_duplicate_parts_not_overlaps(spark):
+    """A relation listing a member twice assembles, covers and joins like
+    one listing it once; a partial overlap still fails the cover with the
+    area named."""
+    sq = np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]])  # open ring
+    far = sq + 5.0
+    once = G.union_as_multipolygon([G.polygon_wkb([sq]), G.polygon_wkb([far])])
+    twice = G.union_as_multipolygon([
+        G.polygon_wkb([sq]), G.multipolygon_wkb([[far], [sq]]), G.polygon_wkb([far]),
+    ])
+    assert twice == once
+    assert len(G.parse_wkb(twice).polygons) == 2
+
+    xy = np.random.default_rng(5).uniform(-1.0, 8.0, (2, 400))
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy.T)],
+        "point_id long, lon double, lat double",
+    )
+    areas = spark.createDataFrame([(7, bytearray(twice))], "area_id long, polygon binary")
+    got = {r.point_id for r in PJ.assign_points_to_areas(spark, pts, areas, res=6).collect()}
+    assert got == set(np.nonzero(G.covers(G.parse_wkb(once), xy[0], xy[1]))[0])
+
+    overlap = G.union_as_multipolygon([G.polygon_wkb([sq]), G.polygon_wkb([sq + 1.0])])
+    bad = spark.createDataFrame([(8, bytearray(overlap))], "area_id long, polygon binary")
+    with pytest.raises(Exception, match="area_id=8 has overlapping"):
+        PJ.cover_cells(bad, 6).collect()

@@ -75,15 +75,19 @@ def test_street_catalog_refine_is_jvm_only(spark):
     from housenumbercore_spark.sources import synthetic as SY
 
     streets = SC.apply_whitelist(STS.street_segments_df(spark, SF))
-    areas = SY.areas_df(spark, SF).filter("admin_level = 8")
-    df = SC.streets_in_areas(spark, streets, areas)
+    # the areas frame dies with the call, and with it the area_cover memo:
+    # the plan below computes the cover itself
+    df = SC.streets_in_areas(
+        spark, streets, SY.areas_df(spark, SF).filter("admin_level = 8"))
     a = audit_plan(df)
     assert not a["has_batch_eval_python"], "row-at-a-time Python on street path"
-    # the only Python: areas→cover mapInPandas, instantiated once per branch
-    # (endpoint + crossing); explain prints each node twice (tree + detail),
-    # so 2 logical occurrences → ≤4 textual. A Python street refine would
-    # add two more.
-    assert a["plan"].count("MapInPandas") <= 4, a["plan"]
+    # the only Python: areas→cover mapInPandas, instantiated once — both
+    # branches (endpoint + crossing) probe one broadcast of it; explain
+    # prints each node twice (tree + detail), so 1 logical occurrence → ≤2
+    # textual. A second cover build or a Python street refine would add two
+    # more.
+    assert a["plan"].count("MapInPandas") <= 2, a["plan"]
+    assert a["plan"].count("BroadcastExchange") <= 2, a["plan"]
     src = inspect.getsource(SC.streets_in_areas)
     assert ".collect()" not in src, "driver-side polygon collect reintroduced"
 
