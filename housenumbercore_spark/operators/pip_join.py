@@ -409,12 +409,25 @@ _COVERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _COVERS_LOCK = threading.Lock()
 
 
+def _plan(df: DataFrame):
+    return df._jdf.queryExecution().analyzed()
+
+
 def _unpersist_covers(memo: dict) -> None:
-    # runs when the areas frame dies; a stopped context cannot unpersist
+    # runs when the areas frame dies; a stopped context cannot unpersist.
+    # Spark keeps one cache entry per plan, and unpersist drops it for every
+    # frame: leave it to a live frame whose cover has the same plan.
+    try:
+        live = [_plan(c) for m in list(_COVERS.values()) if m is not memo
+                for k, c in m.items() if k != "res"]
+    except Exception:  # noqa: BLE001 — memo changed size or context stopped
+        live = []
     for key, cover in memo.items():
         if key != "res":
             try:
-                cover.unpersist()
+                plan = _plan(cover)
+                if not any(plan.sameResult(p) for p in live):
+                    cover.unpersist()
             except Exception:  # noqa: BLE001 — stopped context
                 pass
 
@@ -433,20 +446,19 @@ def area_cover(
     first query that joins against it fills the cache (adaptive execution
     runs that as its own cache stage, one job more than an uncached
     cover), and every later join against the same frame reads it instead
-    of running the Python cover job again. This is not a pin site (pinning.py): the memo outlives a
-    query, so it keeps its lineage whatever the pin strategy — a lost
-    block is recomputed, where a truncated ``localCheckpoint`` would fail
-    every later call on the same handle. After a
-    ``spark.catalog.clearCache()`` the cover is persisted again on the
-    next lookup; when ``areas`` is garbage-collected, its covers are
-    unpersisted.
+    of running the Python cover job again. This is not a pin site
+    (pinning.py): the memo outlives a query, so it keeps its lineage
+    whatever the pin strategy — a lost block is recomputed, where a
+    truncated ``localCheckpoint`` would fail every later call on the same
+    handle. After a ``spark.catalog.clearCache()`` the cover is persisted
+    again on the next lookup; when ``areas`` is garbage-collected, its
+    covers are unpersisted, unless a live frame's cover has the same plan
+    (Spark's cache keeps one entry per plan, shared by both).
 
     The memo is keyed by frame identity, not by plan: a new
-    ``spark.read.parquet(path)`` frame builds its own cover. (Spark's
-    cache keeps one entry for covers with the same plan, so releasing one
-    such frame unpersists the other's cover too; that one is persisted
-    again on its next lookup.) As with ``DataFrame.cache``, the memo
-    assumes that a frame's rows do not change between actions.
+    ``spark.read.parquet(path)`` frame gets its own memo entry and cover
+    frame. As with ``DataFrame.cache``, the memo assumes that a frame's
+    rows do not change between actions.
     """
     with _COVERS_LOCK:
         memo = _COVERS.get(areas)

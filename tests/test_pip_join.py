@@ -439,15 +439,24 @@ def test_area_cover_built_once_per_areas_frame(spark, world, build_counts):
 
 def test_area_cover_released_with_its_frame(spark, world):
     """When the areas frame is collected, its memo entry goes and its
-    persisted cover is unpersisted."""
+    persisted cover is unpersisted, unless a live frame's cover shares its
+    cache entry."""
     import gc
     import weakref
 
     pts, _ = world
+    for df in world:  # fill the fixture's caches before the baseline
+        df.count()
     jsc = spark.sparkContext._jsc
     gc.collect()
     n_memo, n_rdds = len(PJ._COVERS), len(jsc.getPersistentRDDs())
-    areas = S.areas_df(spark, SF)
+
+    def fresh():
+        # a plan no other test's areas frame has (the module's world frame
+        # keeps its cover cached), so the cache entry counted is this one
+        return S.areas_df(spark, SF).filter("area_id != -1")
+
+    areas = fresh()
     assert PJ.assign_points_to_areas(spark, pts, areas).count() > 0
     assert len(PJ._COVERS) == n_memo + 1
     assert len(jsc.getPersistentRDDs()) == n_rdds + 1
@@ -455,6 +464,22 @@ def test_area_cover_released_with_its_frame(spark, world):
     del areas
     gc.collect()
     assert ref() is None
+    assert len(PJ._COVERS) == n_memo
+    assert len(jsc.getPersistentRDDs()) == n_rdds
+
+    # two frames over the same rows share Spark's one cache entry for their
+    # covers' plan: releasing one keeps it for the other, the last frees it
+    first, second = fresh(), fresh()
+    counts = [PJ.assign_points_to_areas(spark, pts, a).count() for a in (first, second)]
+    assert len(jsc.getPersistentRDDs()) == n_rdds + 1
+    cover = PJ.area_cover(second)[1]
+    del first
+    gc.collect()
+    assert cover.storageLevel.useMemory
+    assert len(jsc.getPersistentRDDs()) == n_rdds + 1
+    assert PJ.assign_points_to_areas(spark, pts, second).count() == counts[1] == counts[0]
+    del second, cover
+    gc.collect()
     assert len(PJ._COVERS) == n_memo
     assert len(jsc.getPersistentRDDs()) == n_rdds
 
